@@ -56,15 +56,22 @@ def enrich_sessions(sessions: DataFrame, with_processing_ts: bool = True) -> Dat
     return out
 
 
-def route_sessions(
-    enriched: DataFrame, predicate: Column | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """T6 demux: two complementary filters over one plan (the reference's
-    per-record ternary, consumer.py:160-165). Callers writing both sides
-    should persist/`foreachBatch` the parent so the source is scanned once."""
-    if predicate is None:
-        predicate = F.col("country") == "USA"
-    return enriched.filter(predicate), enriched.filter(~predicate)
+ROUTES = ("USA", "International")
+
+
+def route_column() -> Column:
+    """T6 route of an enriched session (consumer.py:160-165): 'USA' when
+    country == 'USA', else 'International' — a null country included,
+    as in the reference's else-branch."""
+    return F.when(F.col("country") == "USA", "USA").otherwise("International")
+
+
+def route_sessions(enriched: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """T6 demux: the USA and International splits of one plan (the
+    reference's per-record ternary). Callers writing both sides should
+    persist/`foreachBatch` the parent so the source is scanned once."""
+    route = route_column()
+    return enriched.filter(route == "USA"), enriched.filter(route == "International")
 
 
 # ---------------------------------------------------------------------------

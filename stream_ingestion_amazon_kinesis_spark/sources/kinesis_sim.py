@@ -38,6 +38,7 @@ class works on any executor without the package installed.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
@@ -86,27 +87,19 @@ def _shard_files(shard_dir: str) -> list[str]:
     )
 
 
-def _iter_shard_records(shard_dir: str):
-    """Yield (seq, envelope_dict) across the shard's part files in
-    name order — the per-shard sequence-number space."""
-    seq = 0
+def _iter_shard_lines(shard_dir: str):
+    """Yield the shard's non-blank lines, unparsed, across its part files
+    in name order — line i is the record with sequence number i."""
     for fpath in _shard_files(shard_dir):
         with open(fpath, encoding="utf-8") as fh:
             for line in fh:
                 line = line.strip()
                 if line:
-                    yield seq, json.loads(line)
-                    seq += 1
+                    yield line
 
 
 def _shard_length(shard_dir: str) -> int:
-    n = 0
-    for fpath in _shard_files(shard_dir):
-        with open(fpath, encoding="utf-8") as fh:
-            for line in fh:
-                if line.strip():
-                    n += 1
-    return n
+    return sum(1 for _ in _iter_shard_lines(shard_dir))
 
 
 @dataclass
@@ -126,11 +119,15 @@ def _read_shard(part: ShardPartition):
     shard_id = os.path.basename(part.shard_dir)
 
     def rows():
-        for seq, env in _iter_shard_records(part.shard_dir):
-            if seq < part.start:
-                continue
-            if part.end >= 0 and seq >= part.end:
-                break
+        # Records before the slice are counted, never parsed: the cost of
+        # a micro-batch stays with its own rows as the stream grows.
+        lines = itertools.islice(
+            _iter_shard_lines(part.shard_dir),
+            part.start,
+            None if part.end < 0 else part.end,
+        )
+        for seq, line in enumerate(lines, part.start):
+            env = json.loads(line)
             yield (shard_id, seq, env.get("partitionKey"), env.get("data"))
 
     try:
@@ -261,7 +258,7 @@ def _consume_killpoint(stream_dir: str, name: str) -> None:
     makes the calling code deliver SIGKILL to the etl driver (pid from
     SPARK_GRAFT_DRIVER_PID, set by __main__.main) AND to the calling
     process at this exact point — a genuine uncontrolled death, unlike
-    the exception failpoint (which unwinds through abort()). Single-shot:
+    the exception failpoint, which unwinds normally. Single-shot:
     the file is consumed first, so the restarted run proceeds. Test-only;
     two os.path.exists misses per call in normal operation."""
     import signal
@@ -277,6 +274,139 @@ def _consume_killpoint(stream_dir: str, name: str) -> None:
         except (OSError, ValueError):
             pass
     os.kill(os.getpid(), signal.SIGKILL)
+
+
+def shard_of(key: str, num_shards: int) -> int:
+    """put_record routing: the shard a partition key lands on. crc32 is
+    deterministic across processes (Python's hash() is salted) — the
+    MD5-of-partition-key role in Kinesis. `shard_column` is its JVM twin."""
+    return zlib.crc32(key.encode("utf-8")) % num_shards
+
+
+def key_column(key):
+    """JVM twin of the writer's ``str(key)`` for a string key column: the
+    key itself, and 'None' for a null key."""
+    from pyspark.sql import functions as F
+
+    return F.coalesce(key.cast("string"), F.lit("None"))
+
+
+def shard_column(key, num_shards: int):
+    """JVM twin of `shard_of` over a `key_column` value: Spark's crc32 of
+    the UTF-8 bytes is the same unsigned 32-bit value as zlib.crc32."""
+    from pyspark.sql import functions as F
+
+    return F.crc32(key.cast("binary")) % num_shards
+
+
+def _done_marker(stream_dir: str, token: str) -> str:
+    return os.path.join(stream_dir, "_epochs", f"w-{token}")
+
+
+def is_published(stream_dir: str, token: str) -> bool:
+    """Whether `publish` already completed for `token` in this stream."""
+    return os.path.exists(_done_marker(stream_dir, token))
+
+
+def publish(stream_dir: str, staged: list, token: str | None) -> None:
+    """Publish staged part files to the tail of their shards — the commit
+    half of the two-phase write, shared by `KinesisSimWriter.commit` and
+    the routed streaming sink (`streaming.pipeline.kinesis_sim_sink`).
+
+    `staged` lists (relpath, tmp_path) pairs with relpath
+    ``shard-NNNNN/part-<suffix>.jsonl``, in publish order. Files move
+    with os.replace, so every tmp_path must sit on the stream's
+    filesystem. `token` (None for a plain append) is the idempotence
+    token of an epoch retry, ``<checkpoint-scope>e<epoch>``: it is
+    embedded in the published file names, a torn previous attempt of the
+    same token is rolled back before publishing, and a done-marker
+    ``_epochs/w-<token>`` is recorded after the last file — so a retried
+    epoch converges to exactly one copy no matter where the previous
+    attempt died. With the marker already present the staged files are
+    dropped and nothing is published.
+    """
+    # Crash-injection failpoint for the exactly-once tests: a file named
+    # _failpoint_before_commit in the stream dir makes the publish die
+    # AFTER the records were staged but BEFORE any is published — the
+    # torn-write moment. Single-shot (the file is consumed) and
+    # file-based because the DataSource commit runs in a separate Python
+    # worker process where a test's monkeypatch/env can't reach. No-op in
+    # normal operation.
+    failpoint = os.path.join(stream_dir, "_failpoint_before_commit")
+    if os.path.exists(failpoint):
+        os.remove(failpoint)
+        raise RuntimeError("kinesis_sim failpoint: injected crash before commit")
+    # kill -9 drill points: staged, nothing published yet / torn
+    # mid-publish. See _consume_killpoint.
+    _consume_killpoint(stream_dir, "_killpoint_before_publish")
+    kill_mid_publish = os.path.exists(
+        os.path.join(stream_dir, "_killpoint_mid_publish")
+    )
+    done_marker = _done_marker(stream_dir, token) if token else None
+    if done_marker and os.path.exists(done_marker):
+        for _rel, tmp in staged:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+        return
+    if token and os.path.isdir(stream_dir):
+        # Roll back a TORN previous attempt of this same token: any
+        # published file carrying the token sits at its shard's tail (it
+        # was appended by the dead attempt and the epoch never
+        # committed), so deleting it restores the pre-epoch state and the
+        # republish below lands at the same sequence numbers.
+        for d in _shard_dirs(stream_dir):
+            for f in _shard_files(d):
+                if f"-{token}-" in os.path.basename(f):
+                    os.remove(f)
+    # Sequence numbers are defined by FILE-NAME order within a shard
+    # (_iter_shard_lines), so appended files MUST sort after every
+    # existing file or a later append would renumber records a
+    # checkpointed reader already consumed (caught as a real
+    # duplicate+skip in the round-4 etl incremental-resume test: a
+    # lower-sorting uuid part file shifted the committed offsets).
+    # Each new file therefore gets a zero-padded per-shard index =
+    # count of existing files + arrival order; the task-id suffix
+    # keeps concurrent committers collision-free, and zero-padded
+    # indices always sort after lower ones regardless of suffix.
+    # Legacy migration: streams written BEFORE the zero-padded-index
+    # fix hold uuid-named parts (part-<taskid>.jsonl) that new
+    # indexed names can sort BEFORE (e.g. part-00000002-x <
+    # part-3fa9...), renumbering offsets a checkpointed reader has
+    # already consumed — the same duplicate/skip bug the index fix
+    # closed, alive on legacy data. Before appending, rename every
+    # existing file to its canonical index in the CURRENT sorted
+    # order (the order consumers have been reading), which preserves
+    # all record positions and guarantees appends sort after.
+    next_idx: dict[str, int] = {}
+    for rel, tmp in staged:
+        shard_rel = os.path.dirname(rel)
+        shard_dir = os.path.join(stream_dir, shard_rel)
+        os.makedirs(shard_dir, exist_ok=True)
+        if shard_rel not in next_idx:
+            existing = _shard_files(shard_dir)
+            if any(not _INDEXED_RE.match(os.path.basename(f)) for f in existing):
+                for i, f in enumerate(existing):
+                    tail = os.path.basename(f)[len("part-"):]
+                    canon = os.path.join(shard_dir, f"part-{i:08d}-{tail}")
+                    if f != canon:
+                        os.replace(f, canon)
+                existing = _shard_files(shard_dir)
+            next_idx[shard_rel] = len(existing)
+        idx = next_idx[shard_rel]
+        next_idx[shard_rel] = idx + 1
+        suffix = os.path.basename(rel)[len("part-"):]
+        if token:
+            suffix = f"{token}-{suffix}"
+        fname = f"part-{idx:08d}-{suffix}"
+        os.replace(tmp, os.path.join(shard_dir, fname))
+        if kill_mid_publish:
+            # consume + SIGKILL after the FIRST publish: a
+            # genuinely torn multi-file publish for the drill.
+            _consume_killpoint(stream_dir, "_killpoint_mid_publish")
+    if done_marker:
+        os.makedirs(os.path.dirname(done_marker), exist_ok=True)
+        with open(done_marker, "w", encoding="utf-8") as fh:
+            fh.write("ok")
 
 
 @dataclass
@@ -302,13 +432,9 @@ class KinesisSimWriter(DataSourceWriter):
         self.num_shards = num_shards
         self.key_col = key_col
         self.data_col = data_col
-        # Idempotence token for epoch retries (option commitToken, set by
-        # the streaming sink to <checkpoint-scope>e<epoch>): commit()
-        # embeds it in published file names, rolls back a torn previous
-        # attempt of the SAME token before publishing, and records a
-        # done-marker after — so a retried epoch converges to exactly one
-        # copy no matter where the previous attempt died. None (plain
-        # batch writes) keeps the plain append behavior.
+        # Idempotence token for epoch retries (option commitToken), with
+        # the protocol of `publish`. None (plain batch writes) keeps the
+        # plain append behavior.
         self.commit_token = commit_token
 
     def write(self, iterator) -> ShardWriteCommit:
@@ -319,9 +445,7 @@ class KinesisSimWriter(DataSourceWriter):
         try:
             for row in iterator:
                 key = str(row[self.key_col])
-                # crc32: deterministic cross-process (Python's hash() is
-                # salted), the MD5-of-partition-key role in Kinesis.
-                shard = zlib.crc32(key.encode("utf-8")) % self.num_shards
+                shard = shard_of(key, self.num_shards)
                 if shard not in handles:
                     rel = os.path.join(
                         f"shard-{shard:05d}", f"part-{task_id}.jsonl"
@@ -337,99 +461,11 @@ class KinesisSimWriter(DataSourceWriter):
         return ShardWriteCommit(files=files)
 
     def commit(self, messages) -> None:
-        # Crash-injection failpoint for the exactly-once tests: a file
-        # named _failpoint_before_commit in the stream dir makes this
-        # commit die AFTER task files landed in staging but BEFORE any
-        # is published — the torn-write moment. Single-shot (the file is
-        # consumed) and file-based because commit runs in a separate
-        # Python worker process where a test's monkeypatch/env can't
-        # reach. No-op in normal operation.
-        failpoint = os.path.join(self.path, "_failpoint_before_commit")
-        if os.path.exists(failpoint):
-            os.remove(failpoint)
-            raise RuntimeError(
-                "kinesis_sim failpoint: injected crash before commit"
-            )
-        # kill -9 drill points (round-7 chaos tests): staged, nothing
-        # published yet / torn mid-publish. See _consume_killpoint.
-        _consume_killpoint(self.path, "_killpoint_before_publish")
-        kill_mid_publish = os.path.exists(
-            os.path.join(self.path, "_killpoint_mid_publish")
+        publish(
+            self.path,
+            [f for msg in messages if msg is not None for f in msg.files],
+            self.commit_token,
         )
-        token = self.commit_token
-        done_marker = (
-            os.path.join(self.path, "_epochs", f"w-{token}") if token else None
-        )
-        if done_marker and os.path.exists(done_marker):
-            # This exact (checkpoint-scope, epoch) already published in a
-            # previous attempt that died between writer commit and the
-            # sink's own marker: drop the retry's staged files, publish
-            # nothing — the stream already holds exactly one copy.
-            self.abort(messages)
-            return
-        if token:
-            # Roll back a TORN previous attempt of this same token: any
-            # published file carrying the token sits at its shard's tail
-            # (it was appended by the dead attempt and the epoch never
-            # committed), so deleting it restores the pre-epoch state and
-            # the republish below lands at the same sequence numbers.
-            if os.path.isdir(self.path):
-                for d in _shard_dirs(self.path):
-                    for f in _shard_files(d):
-                        if f"-{token}-" in os.path.basename(f):
-                            os.remove(f)
-        # Sequence numbers are defined by FILE-NAME order within a shard
-        # (_iter_shard_records), so appended files MUST sort after every
-        # existing file or a later append would renumber records a
-        # checkpointed reader already consumed (caught as a real
-        # duplicate+skip in the round-4 etl incremental-resume test: a
-        # lower-sorting uuid part file shifted the committed offsets).
-        # Each new file therefore gets a zero-padded per-shard index =
-        # count of existing files + arrival order; the task-id suffix
-        # keeps concurrent committers collision-free, and zero-padded
-        # indices always sort after lower ones regardless of suffix.
-        # Legacy migration: streams written BEFORE the zero-padded-index
-        # fix hold uuid-named parts (part-<taskid>.jsonl) that new
-        # indexed names can sort BEFORE (e.g. part-00000002-x <
-        # part-3fa9...), renumbering offsets a checkpointed reader has
-        # already consumed — the same duplicate/skip bug the index fix
-        # closed, alive on legacy data. Before appending, rename every
-        # existing file to its canonical index in the CURRENT sorted
-        # order (the order consumers have been reading), which preserves
-        # all record positions and guarantees appends sort after.
-        next_idx: dict[str, int] = {}
-        for msg in messages:
-            if msg is None:
-                continue
-            for rel, tmp in msg.files:
-                shard_rel = os.path.dirname(rel)
-                shard_dir = os.path.join(self.path, shard_rel)
-                os.makedirs(shard_dir, exist_ok=True)
-                if shard_rel not in next_idx:
-                    existing = _shard_files(shard_dir)
-                    if any(not _INDEXED_RE.match(os.path.basename(f)) for f in existing):
-                        for i, f in enumerate(existing):
-                            tail = os.path.basename(f)[len("part-"):]
-                            canon = os.path.join(shard_dir, f"part-{i:08d}-{tail}")
-                            if f != canon:
-                                os.replace(f, canon)
-                        existing = _shard_files(shard_dir)
-                    next_idx[shard_rel] = len(existing)
-                idx = next_idx[shard_rel]
-                next_idx[shard_rel] = idx + 1
-                suffix = os.path.basename(rel)[len("part-"):]
-                if token:
-                    suffix = f"{token}-{suffix}"
-                fname = f"part-{idx:08d}-{suffix}"
-                os.replace(tmp, os.path.join(shard_dir, fname))
-                if kill_mid_publish:
-                    # consume + SIGKILL after the FIRST publish: a
-                    # genuinely torn multi-file publish for the drill.
-                    _consume_killpoint(self.path, "_killpoint_mid_publish")
-        if done_marker:
-            os.makedirs(os.path.dirname(done_marker), exist_ok=True)
-            with open(done_marker, "w", encoding="utf-8") as fh:
-                fh.write("ok")
         staging = os.path.join(self.path, "_staging")
         if os.path.isdir(staging) and not os.listdir(staging):
             os.rmdir(staging)

@@ -14,9 +14,12 @@ plan, incrementalized by the micro-batch engine:
 - transform: the exact T1-T6 enrichment from operators/enrichment.py —
   same code object as the batch path, which is what makes streaming
   results oracle-checkable by batch replay.
-- sink: `foreachBatch` demux that writes BOTH routed outputs and the
-  quarantine from one cached micro-batch (one source scan per trigger —
-  the reference re-serializes record-at-a-time, consumer.py:160-171).
+- sink: `foreachBatch` demux to BOTH routes (the reference
+  re-serializes record-at-a-time, consumer.py:160-171). The kinesis_sim
+  destination collects the whole routed micro-batch with one Spark job,
+  then stages and publishes each route on the driver; the file
+  destination writes each route and the quarantine from a cached
+  micro-batch.
 - state: checkpointed offsets give exactly-once file output, replacing
   the reference's restart-equals-replay behavior (consumer.py:76).
 
@@ -29,14 +32,21 @@ preserved by repartitioning on session_id before the sink write.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.enrichment import enrich_sessions
+from ..operators.enrichment import (
+    ROUTES,
+    enrich_sessions,
+    route_column,
+    route_sessions,
+)
 from ..sources.json_source import CORRUPT_COL, SESSION_SCHEMA
 
 
@@ -102,12 +112,10 @@ def enrichment_sink(output_dir: str):
             quarantine = batch.filter(F.col(CORRUPT_COL).isNotNull()).select(
                 F.col(CORRUPT_COL).alias("raw_record")
             )
-            enriched = enrich_sessions(ok)
             # T7: partition-key locality on session_id before the write —
             # the file-sink equivalent of put_record(PartitionKey=...).
-            for name, part in (
-                ("usa", enriched.filter(F.col("country") == "USA")),
-                ("international", enriched.filter(F.col("country") != "USA")),
+            for name, part in zip(
+                ("usa", "international"), route_sessions(enrich_sessions(ok))
             ):
                 (
                     part.repartition(F.col("session_id"))
@@ -261,80 +269,106 @@ def kinesis_sim_sink(
     """foreachBatch body writing each routed split to a kinesis_sim
     DESTINATION STREAM — the reference's dest_streams demux
     (consumer.py:160-171: country == 'USA' -> USA stream, else
-    International, PartitionKey=session_id) executed through the custom
-    DataSource's two-phase writer instead of per-record put_record.
+    International, PartitionKey=session_id) as one Spark job per
+    micro-batch instead of per-record put_record. The JVM computes each
+    enriched record's route, shard and {"partitionKey", "data"} envelope,
+    and one `collect` brings the envelopes to the driver, which stages
+    them once, one file per route and shard, under
+    `<USA stream>/_staging/<token>/` (`_stage`) and publishes each
+    route's files with `kinesis_sim.publish`, whose commit token
+    ``<run_scope>e<epoch>`` makes an epoch retry converge to one copy.
+    Markers and tokens are scoped to the checkpoint identity (`run_scope`):
+    epoch ids restart at 0 under a fresh checkpoint.
+
     `dest_streams` maps route name ('USA'/'International') to a stream
-    directory path."""
+    directory; the directories are created here and must sit on one
+    filesystem, since publishing moves the staged files with os.replace.
+
+    The driver holds one micro-batch's envelopes; the kinesis_sim source
+    caps a micro-batch at `maxFetchRecordsPerShard` records per shard.
+    Staging on the driver keeps the write free of Python worker tasks
+    and of Spark's file writers, whose Hadoop local filesystem spawns a
+    `chmod` process per file and directory when native libhadoop is
+    absent."""
+    from ..sources.kinesis_sim import (
+        _consume_killpoint,
+        is_published,
+        key_column,
+        publish,
+        shard_column,
+    )
+
+    missing = [r for r in ROUTES if r not in dest_streams]
+    if missing:
+        raise ValueError(f"dest_streams lacks routes {missing}: {dest_streams}")
+    routes = [(r, dest_streams[r]) for r in ROUTES]
+    for _route, path in routes:
+        os.makedirs(path, exist_ok=True)
+    devices = {path: os.stat(path).st_dev for _route, path in routes}
+    if len(set(devices.values())) > 1:
+        raise ValueError(
+            "kinesis_sim destination streams must sit on one filesystem "
+            f"(published with os.replace); devices by path: {devices}"
+        )
+    # kill -9 drill points (tests/test_cli.py) are armed by files in this
+    # stream dir: torn WAL with nothing / one route / both routes
+    # published. No-ops in normal operation.
+    first = routes[0][1]
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        from ..sources.kinesis_sim import _consume_killpoint, register_format
-
-        register_format(batch.sparkSession)
-        # kill -9 drill points (round-7 chaos tests): torn WAL with
-        # nothing / one route / both routes published. Armed by files in
-        # the FIRST route's stream dir; no-ops in normal operation.
-        first_route = next(iter(dest_streams.values()))
-        _consume_killpoint(first_route, "_killpoint_batch_start")
-        batch.persist()
+        token = f"{run_scope}e{epoch_id:020d}"
+        stage_dir = os.path.join(first, "_staging", token)
+        _consume_killpoint(first, "_killpoint_batch_start")
         try:
-            ok = batch.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-            enriched = enrich_sessions(ok)
-            # S4 JSON encode inline (json_source.to_json_records semantics):
-            # ISO-8601 timestamps native to to_json.
-            records = enriched.select(
-                F.col("session_id").alias("partition_key"),
-                F.to_json(F.struct(*enriched.columns)).alias("data"),
-                F.col("country"),
-            )
-            for route, pred in (
-                ("USA", F.col("country") == "USA"),
-                ("International", F.col("country") != "USA"),
-            ):
-                # Epoch-retry idempotence, two layers:
-                # (1) this sink-level marker skips re-RUNNING the write
-                #     job for a route that already committed (restart
-                #     after a crash between the two route writes);
-                # (2) the writer-level commitToken (round 7) makes the
-                #     publish itself idempotent: commit() names published
-                #     files with the token, rolls back a torn previous
-                #     attempt of the same token before republishing, and
-                #     records its own done-marker after the last file —
-                #     closing both residual holes the marker alone left
-                #     open (crash between writer-commit and marker
-                #     creation re-appended the route; kill -9 mid-publish
-                #     re-appended the already-published files). Both are
-                #     exercised by the kill -9 drills in tests/test_cli.py.
-                # Markers and tokens are scoped to the CHECKPOINT identity
-                # (run_scope): epoch ids restart at 0 under a fresh
-                # checkpoint, and an unscoped epoch-0 marker from an
-                # earlier run into the same dest would silently skip the
-                # new run's first epoch.
-                marker = os.path.join(
-                    dest_streams[route],
-                    "_epochs",
-                    f"{run_scope}-{epoch_id:020d}",
+            if not all(is_published(path, token) for _route, path in routes):
+                shutil.rmtree(stage_dir, ignore_errors=True)
+                ok = batch.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+                enriched = enrich_sessions(ok)
+                key = key_column(F.col("session_id"))
+                envelope = F.struct(
+                    key.alias("partitionKey"),
+                    F.to_json(F.struct(*enriched.columns)).alias("data"),
                 )
-                if os.path.exists(marker):
-                    continue
-                (
-                    records.filter(pred)
-                    .drop("country")
-                    .write.format("kinesis_sim")
-                    .option("path", dest_streams[route])
-                    .option("numShards", str(num_shards))
-                    .option("commitToken", f"{run_scope}e{epoch_id:020d}")
-                    .mode("append")
-                    .save()
+                staged = _stage(
+                    stage_dir,
+                    enriched.select(
+                        route_column(),
+                        shard_column(key, num_shards),
+                        F.to_json(envelope),
+                    ).collect(),
                 )
-                os.makedirs(os.path.dirname(marker), exist_ok=True)
-                with open(marker, "w", encoding="utf-8") as fh:
-                    fh.write("ok")
-                _consume_killpoint(first_route, "_killpoint_between_routes")
-            _consume_killpoint(first_route, "_killpoint_after_routes")
+                for route, path in routes:
+                    publish(path, staged.get(route, []), token)
+                    _consume_killpoint(first, "_killpoint_between_routes")
+            _consume_killpoint(first, "_killpoint_after_routes")
         finally:
-            batch.unpersist()
+            shutil.rmtree(stage_dir, ignore_errors=True)
+            with contextlib.suppress(OSError):
+                os.rmdir(os.path.dirname(stage_dir))
 
     return write_batch
+
+
+def _stage(stage_dir: str, rows) -> dict[str, list[tuple[str, str]]]:
+    """Write (route, shard, envelope) rows to one staged file per route
+    and shard, in row order, so records of one key keep their source
+    order in their shard. Returns each route's (shard-relative path,
+    staged path) pairs, as `kinesis_sim.publish` takes them."""
+    os.makedirs(stage_dir, exist_ok=True)
+    handles, staged = {}, {}
+    try:
+        for route, shard, line in rows:
+            fh = handles.get((route, shard))
+            if fh is None:
+                tmp = os.path.join(stage_dir, f"{route}-{shard:05d}.jsonl")
+                fh = handles[(route, shard)] = open(tmp, "w", encoding="utf-8")
+                rel = os.path.join(f"shard-{shard:05d}", "part-batch.jsonl")
+                staged.setdefault(route, []).append((rel, tmp))
+            fh.write(line + "\n")
+    finally:
+        for fh in handles.values():
+            fh.close()
+    return staged
 
 
 def read_session_stream_kinesis_sim(
@@ -382,13 +416,11 @@ def run_kinesis_sim_pipeline(
             f"source_format must be 'json' or 'kinesis_sim', "
             f"got {source_format!r}"
         )
-    for path in dest_streams.values():
-        os.makedirs(path, exist_ok=True)
     if source_format == "kinesis_sim":
         stream = read_session_stream_kinesis_sim(spark, input_dir)
     else:
         stream = read_session_stream(spark, input_dir)
-    # Epoch-marker scope = the checkpoint path: one checkpoint == one
+    # Commit-token scope = the checkpoint path: one checkpoint == one
     # monotone epoch-id space, so markers from a different (e.g. fresh)
     # checkpoint can never suppress this run's writes.
     scope = hashlib.sha256(

@@ -307,32 +307,36 @@ def test_cli_etl_crash_before_commit_exactly_once(tmp_path, spark, capsys):
         assert [json.loads(r["data"])["session_id"] for r in rows] == [sid]
 
 
-KILL_POINTS = (
+KILL_DRILLS = (
+    # (kill point, route whose stream dir arms it)
     # write_batch entry: offset WAL may be ahead, nothing published
-    "_killpoint_batch_start",
-    # writer commit: task files staged, zero published (the verdict's
-    # "between task-file landing and checkpoint commit" moment)
-    "_killpoint_before_publish",
-    # writer commit mid-loop: SOME of the route's files published — the
-    # torn publish only the commitToken rollback can repair
-    "_killpoint_mid_publish",
-    # first route committed + marker, second route never started
-    "_killpoint_between_routes",
-    # both routes committed, epoch commit log never written (torn WAL)
-    "_killpoint_after_routes",
+    ("_killpoint_batch_start", "USA"),
+    # publish: records staged, zero published (the "between task-file
+    # landing and checkpoint commit" moment)
+    ("_killpoint_before_publish", "USA"),
+    # publish mid-loop: SOME of the route's files published — the torn
+    # publish only the commitToken rollback can repair
+    ("_killpoint_mid_publish", "USA"),
+    # first route published + done-marker, second route never started
+    ("_killpoint_between_routes", "USA"),
+    # both routes published, epoch commit log never written (torn WAL)
+    ("_killpoint_after_routes", "USA"),
+    # both routes publish in one epoch: USA published + done-marker, the
+    # International publish dies before its first file / after it
+    ("_killpoint_before_publish", "International"),
+    ("_killpoint_mid_publish", "International"),
 )
 
 
 def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
-    """VERDICT r6 ask #3: kill -9 the etl DRIVER at five seeded points
-    spanning the whole micro-batch commit protocol, restart, and assert
-    every destination stream holds exactly one copy of every record.
-    Unlike the exception failpoint (which unwinds through abort()), a
-    SIGKILL leaves genuinely torn state: staged files, half-published
-    epochs, offset WAL ahead of the commit log. Runs each drill as a
-    real `python -m ... etl` subprocess (1 GiB driver); the five armed
-    runs and the five restarts are each launched concurrently to bound
-    wall time."""
+    """VERDICT r6 ask #3: kill -9 the etl DRIVER at seeded points
+    spanning the whole micro-batch commit protocol, on both routes,
+    restart, and assert every destination stream holds exactly one copy
+    of every record. Unlike the exception failpoint, a SIGKILL leaves
+    genuinely torn state: staged files, half-published epochs, offset
+    WAL ahead of the commit log. Runs each drill as a real
+    `python -m ... etl` subprocess (1 GiB driver); the armed runs and
+    the restarts are each launched concurrently to bound wall time."""
     import subprocess
     import sys
     import time
@@ -345,8 +349,8 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
         rec = dict(RECORD, session_id=f"s-k{i}", country=country)
         records.append(rec)
 
-    def make_topo(kp: str):
-        base = tmp_path / kp.strip("_")
+    def make_topo(kp: str, route: str):
+        base = tmp_path / f"{kp.strip('_')}-{route}"
         stream, usa, intl, ckpt = (
             str(base / d) for d in ("stream", "usa", "intl", "ckpt")
         )
@@ -366,7 +370,9 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
                         + "\n"
                     )
         os.makedirs(usa)
-        with open(os.path.join(usa, kp), "w", encoding="utf-8") as fh:
+        os.makedirs(intl)
+        armed_dir = usa if route == "USA" else intl
+        with open(os.path.join(armed_dir, kp), "w", encoding="utf-8") as fh:
             fh.write("arm")
         args = [
             sys.executable,
@@ -382,7 +388,7 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
             "--source-format",
             "kinesis_sim",
         ]
-        return args, usa, intl
+        return args, usa, intl, armed_dir
 
     # A stale pid from an in-process main() run in THIS process must not
     # leak into the drills (the kill would target pytest itself).
@@ -390,44 +396,44 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     env["SPARK_GRAFT_CPUS"] = "4"
 
-    topos = {kp: make_topo(kp) for kp in KILL_POINTS}
+    topos = {drill: make_topo(*drill) for drill in KILL_DRILLS}
 
     def launch_all():
         return {
-            kp: subprocess.Popen(
-                topos[kp][0],
+            drill: subprocess.Popen(
+                topos[drill][0],
                 env=env,
                 stdout=subprocess.DEVNULL,
                 stderr=subprocess.DEVNULL,
             )
-            for kp in KILL_POINTS
+            for drill in KILL_DRILLS
         }
 
-    # Deadline sized for a CONTENDED box: 5 concurrent 4-cpu JVM drivers
+    # Deadline sized for a CONTENDED box: 7 concurrent 4-cpu JVM drivers
     # can share the machine with other Spark sessions (measured: 420 s
     # times out when two full gates run alongside; the drills themselves
     # take ~90 s each unloaded).
     def wait_all(procs, deadline=900):
         t0 = time.time()
         codes = {}
-        for kp, p in procs.items():
+        for drill, p in procs.items():
             left = max(5, deadline - (time.time() - t0))
             try:
-                codes[kp] = p.wait(timeout=left)
+                codes[drill] = p.wait(timeout=left)
             except subprocess.TimeoutExpired:
                 p.kill()
-                codes[kp] = "timeout"
+                codes[drill] = "timeout"
         return codes
 
     armed = wait_all(launch_all())
-    for kp, code in armed.items():
-        assert code != 0 and code != "timeout", f"{kp}: armed run exited {code}"
+    for drill, code in armed.items():
+        assert code != 0 and code != "timeout", f"{drill}: armed run exited {code}"
         # the armed file was consumed (the drill actually fired)
-        assert not os.path.exists(os.path.join(topos[kp][1], kp)), kp
+        assert not os.path.exists(os.path.join(topos[drill][3], drill[0])), drill
 
     restarted = wait_all(launch_all())
-    for kp, code in restarted.items():
-        assert code == 0, f"{kp}: restart exited {code}"
+    for drill, code in restarted.items():
+        assert code == 0, f"{drill}: restart exited {code}"
 
     def stream_sessions(dest: str) -> list[str]:
         out = []
@@ -450,10 +456,10 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
 
     want_usa = sorted(r["session_id"] for r in records if r["country"] == "USA")
     want_intl = sorted(r["session_id"] for r in records if r["country"] != "USA")
-    for kp in KILL_POINTS:
-        _, usa, intl = topos[kp]
-        assert sorted(stream_sessions(usa)) == want_usa, f"{kp}: USA not exactly-once"
-        assert sorted(stream_sessions(intl)) == want_intl, f"{kp}: intl not exactly-once"
+    for drill in KILL_DRILLS:
+        _, usa, intl, _ = topos[drill]
+        assert sorted(stream_sessions(usa)) == want_usa, f"{drill}: USA not exactly-once"
+        assert sorted(stream_sessions(intl)) == want_intl, f"{drill}: intl not exactly-once"
 
 
 def test_cli_etl_partial_epoch_retry_skips_committed_route(tmp_path, spark, capsys):

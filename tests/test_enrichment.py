@@ -87,13 +87,19 @@ def test_enrichment_semantics(spark):
 
 
 def test_routing_demux(spark):
-    ok, _ = parse_json_records(_raw_df(spark))
+    # A null country takes the reference's else-branch: International.
+    null_country = dict(RECORDS[1], session_id="s4", country=None)
+    raw = _raw_df(spark).union(
+        spark.createDataFrame([(json.dumps(null_country),)], "value string")
+    )
+    ok, _ = parse_json_records(raw)
     enriched = enrich_sessions(ok)
     usa, intl = route_sessions(enriched)
     assert [r["session_id"] for r in usa.select("session_id").collect()] == ["s1"]
     assert sorted(r["session_id"] for r in intl.select("session_id").collect()) == [
         "s2",
         "s3",
+        "s4",
     ]
 
 

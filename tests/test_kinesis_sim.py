@@ -455,3 +455,165 @@ def test_commit_token_makes_appends_idempotent(spark, tmp_path):
     # (c) a new token appends
     write("scopeAe2")
     assert n_records() == 20
+
+
+def _write_source_stream(stream: str, shards: dict[int, list[list[dict]]]) -> None:
+    """A kinesis_sim stream written directly in its on-disk layout: for
+    each shard, one part file per list of records."""
+    import json
+
+    for shard, files in shards.items():
+        d = os.path.join(stream, f"shard-{shard:05d}")
+        os.makedirs(d)
+        for i, recs in enumerate(files):
+            with open(os.path.join(d, f"part-{i:08d}-src.jsonl"), "w", encoding="utf-8") as fh:
+                for rec in recs:
+                    env = {"partitionKey": rec["session_id"], "data": json.dumps(rec)}
+                    fh.write(json.dumps(env) + "\n")
+
+
+def test_slice_reads_match_full_read_filtered(tmp_path):
+    """A slice [start, end) read across part-file boundaries (and past a
+    blank line, which holds no sequence number) returns exactly the rows
+    of a full read filtered to the slice."""
+    stream = str(tmp_path / "stream")
+    files = [[{"session_id": f"s{f}-{i}"} for i in range(n)] for f, n in enumerate((3, 1, 4))]
+    _write_source_stream(stream, {0: files})
+    shard = kinesis_sim._shard_dirs(stream)[0]
+    with open(os.path.join(shard, "part-00000001-src.jsonl"), "a", encoding="utf-8") as fh:
+        fh.write("\n")
+
+    def rows(start, end):
+        part = kinesis_sim.ShardPartition(shard, start, end)
+        return [r for b in kinesis_sim._read_shard(part) for r in b.to_pylist()]
+
+    full = rows(0, -1)
+    assert [r["sequence_number"] for r in full] == list(range(8))
+    for start, end in ((0, 0), (0, 3), (2, 5), (3, 4), (4, 8), (5, -1), (7, 8), (8, -1)):
+        want = [
+            r for r in full
+            if r["sequence_number"] >= start and (end < 0 or r["sequence_number"] < end)
+        ]
+        assert rows(start, end) == want, (start, end)
+
+
+def test_routed_sink_rejects_streams_on_two_filesystems(tmp_path, monkeypatch):
+    """Publishing moves staged files with os.replace, so the routed sink
+    refuses destination streams on different filesystems when built."""
+    from stream_ingestion_amazon_kinesis_spark.streaming.pipeline import kinesis_sim_sink
+
+    dest = {"USA": str(tmp_path / "usa"), "International": str(tmp_path / "intl")}
+    real_stat = os.stat
+
+    def stat(path, *args, **kwargs):
+        st = real_stat(path, *args, **kwargs)
+        if os.fspath(path) != dest["International"]:
+            return st
+        fields = list(st[:10])
+        fields[2] += 1  # st_dev
+        return os.stat_result(fields)
+
+    monkeypatch.setattr(os, "stat", stat)
+    with pytest.raises(ValueError, match="one filesystem") as err:
+        kinesis_sim_sink(dest)
+    assert dest["USA"] in str(err.value) and dest["International"] in str(err.value)
+
+
+def _run_routed_pipeline(spark, tmp_path, shards, monkeypatch):
+    """Run `run_kinesis_sim_pipeline` over a kinesis_sim source stream to
+    completion, each micro-batch's Spark jobs in a job group of its own.
+    Returns (dest streams, job ids per micro-batch, staging dirs left)."""
+    import uuid
+
+    from stream_ingestion_amazon_kinesis_spark.streaming import pipeline
+
+    stream = str(tmp_path / "stream")
+    _write_source_stream(stream, shards)
+    dest = {"USA": str(tmp_path / "usa"), "International": str(tmp_path / "intl")}
+    groups = []
+    build = pipeline.kinesis_sim_sink
+
+    def traced_sink(*args, **kwargs):
+        inner = build(*args, **kwargs)
+
+        def write_batch(batch, epoch_id):
+            sc = batch.sparkSession.sparkContext
+            group = f"routed-sink-{uuid.uuid4().hex[:8]}-{epoch_id}"
+            groups.append(group)
+            sc.setJobGroup(group, group)
+            try:
+                inner(batch, epoch_id)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        return write_batch
+
+    monkeypatch.setattr(pipeline, "kinesis_sim_sink", traced_sink)
+    q = pipeline.run_kinesis_sim_pipeline(
+        spark, stream, dest, str(tmp_path / "ckpt"), source_format="kinesis_sim"
+    )
+    try:
+        q.processAllAvailable()
+        staging = [d for d in dest.values() if os.path.exists(os.path.join(d, "_staging"))]
+    finally:
+        q.stop()
+    tracker = spark.sparkContext.statusTracker()
+    return dest, [tracker.getJobIdsForGroup(g) for g in groups], staging
+
+
+def _session(sid: str, country, n: int) -> dict:
+    return {
+        "session_id": sid,
+        "customer_number": n,
+        "country": country,
+        "browse_history": [{"product_code": "p", "quantity": "1", "in_shopping_cart": True}],
+    }
+
+
+def test_routed_sink_one_job_per_micro_batch(spark, tmp_path, monkeypatch):
+    """Structure pin: each non-empty micro-batch stages both routes with
+    ONE Spark job, and publishing leaves no staging directory behind."""
+    shards = {
+        0: [[_session(f"a{i}", "USA" if i % 2 else "Peru", i) for i in range(40)]],
+        1: [[_session(f"b{i}", "USA" if i % 3 else "Chile", i) for i in range(40)]],
+    }
+    _dest, jobs, staging = _run_routed_pipeline(spark, tmp_path, shards, monkeypatch)
+    assert jobs and [len(j) for j in jobs] == [1] * len(jobs)
+    assert staging == []
+
+
+def test_routed_sink_null_country_and_per_key_order(spark, tmp_path, monkeypatch):
+    """A null-country session lands exactly once in International (the
+    reference's else-branch), and records sharing a session_id in one
+    micro-batch keep their source order in their destination shard."""
+    import json
+
+    countries = {"u1": "USA", "u2": "USA", "x1": "Peru", "x2": "Chile", "n1": None}
+    recs = []
+    for n in range(150):  # sessions interleaved; customer_number = source order
+        sid = list(countries)[n % len(countries)]
+        recs.append(_session(sid, countries[sid], n))
+    no_country = {k: v for k, v in _session("n2", None, 150).items() if k != "country"}
+    dest, _jobs, _staging = _run_routed_pipeline(
+        spark, tmp_path, {0: [recs[:70], recs[70:]], 1: [[no_country]]}, monkeypatch
+    )
+    recs.append(no_country)
+
+    def routed(path):
+        rows = (
+            spark.read.format("kinesis_sim").option("path", path).load()
+            .orderBy("shard_id", "sequence_number").collect()
+        )
+        return [(r.shard_id, r.partition_key, json.loads(r.data)) for r in rows]
+
+    usa, intl = routed(dest["USA"]), routed(dest["International"])
+    assert {sid for _s, sid, _d in usa} == {"u1", "u2"}
+    assert {sid for _s, sid, _d in intl} == {"x1", "x2", "n1", "n2"}
+    for rows in (usa, intl):
+        by_key = {}
+        for shard, sid, data in rows:
+            assert shard == f"shard-{kinesis_sim.shard_of(sid, 4):05d}"
+            by_key.setdefault(sid, []).append(data["customer_number"])
+        for sid, seen in by_key.items():
+            want = [r["customer_number"] for r in recs if r["session_id"] == sid]
+            assert seen == want, sid

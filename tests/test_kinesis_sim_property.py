@@ -50,3 +50,37 @@ def test_write_read_roundtrip_multiset(spark, tmp_path_factory, records, num_sha
         seqs.setdefault(r.shard_id, []).append(r.sequence_number)
     for got in seqs.values():
         assert sorted(got) == list(range(len(got)))
+
+
+# Any key the JVM can carry: ASCII, non-ASCII, empty, and null (which the
+# DataSource writer routes as str(None)). Lone surrogates are excluded:
+# they have no UTF-8 encoding on either side.
+ANY_KEYS = st.one_of(
+    st.none(), st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=12)
+)
+SHARD_COUNTS = (1, 2, 3, 4, 7, 32)
+
+
+@given(keys=st.lists(ANY_KEYS, min_size=1, max_size=100))
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_jvm_shard_matches_writer_routing(spark, keys):
+    """The routed sink's JVM shard expression sends every key to the shard
+    `KinesisSimWriter.write` picks: shard_of(str(key), n)."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    key = kinesis_sim.key_column(F.col("k"))
+    got = df.select(
+        "k",
+        key.alias("key"),
+        *(kinesis_sim.shard_column(key, n).alias(f"s{n}") for n in SHARD_COUNTS),
+    ).collect()
+    assert sorted(repr(r.k) for r in got) == sorted(repr(k) for k in keys)
+    for r in got:
+        assert r.key == str(r.k)
+        for n in SHARD_COUNTS:
+            assert r[f"s{n}"] == kinesis_sim.shard_of(str(r.k), n), (r.k, n)
