@@ -916,7 +916,6 @@ def exact_passage_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from ..plans.registry import QUERIES as _QUERIES  # noqa: E402
-from pyspark.sql.window import Window as _W  # noqa: E402
 
 
 @register(
@@ -961,14 +960,15 @@ def _prefix_relation(tok: DataFrame) -> DataFrame:
     per-doc distinct), posexplode ONLY the prefix slice. Prefix length
     for t=0.8 in exact integers: |d| - ceil(0.8|d|) + 1 =
     n - (4n+4) div 5 + 1; rn = 1-based position in the rarity order.
-    Factored out so the pre-checkpoint plan stays pin/guard-visible
+    A doc whose rows carry two sources gets the least of them, whatever
+    the row order. Factored out so the pre-checkpoint plan stays pin/guard-visible
     via EXTRA_PLAN_BUILDERS (the caller lazily checkpoints it)."""
     dfreq = tok.groupBy("source", "token").agg(F.count("*").alias("df"))
     arrs = (
         tok.join(dfreq, ["source", "token"])
         .groupBy("doc_id")
         .agg(
-            F.first("source").alias("source"),
+            F.min("source").alias("source"),
             F.sort_array(F.collect_list(F.struct("df", "token"))).alias(
                 "arr"
             ),

@@ -1288,6 +1288,20 @@ def _km_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding"),
         lambda x: F.floor(x.cast("double") * KMEANS_SCALE + F.lit(0.5)),
     )
+    # _km_assign's unrolled distance is NULL past the end of a short
+    # vector, and min_by would then pick an arbitrary cluster: refuse
+    # short (or null) embeddings in the projection itself, no extra job.
+    short = F.coalesce(F.size("embedding"), F.lit(-1)) < EMB_DIM
+    qv = F.when(
+        short,
+        F.raise_error(
+            F.format_string(
+                f"embeddings.vec_id %s has %s elements; k-means needs {EMB_DIM}",
+                F.col("vec_id"),
+                F.size("embedding"),
+            )
+        ),
+    ).otherwise(qv)
     return emb.select("vec_id", qv.alias("qv"))
 
 

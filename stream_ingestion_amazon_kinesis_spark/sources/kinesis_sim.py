@@ -8,13 +8,21 @@ the produce side (producer_from_cli_my_modifications.py:40-47). This
 module re-expresses that protocol in Spark's own source/sink contracts
 instead of a driver-side loop:
 
-- shard          -> ``InputPartition``  (one read task per shard; the
-                    shard LISTING is driver-side metadata, exactly like
-                    list_shards pagination)
+- shard          -> one slice of a micro-batch (a batch read runs one
+                    ``InputPartition`` per shard; the shard LISTING is
+                    driver-side metadata, exactly like list_shards
+                    pagination)
 - shard iterator -> streaming offset (per-shard record index, persisted
                     in the checkpoint rather than in process memory)
+- get_records    -> ``read(start)`` of a ``SimpleDataSourceStreamReader``,
+                    run in the driver's long-lived source process: it
+                    returns every shard's slice as Arrow plus the end
+                    offset, and the engine ships the slices to the JVM as
+                    the micro-batch's one prefetched partition, so a live
+                    batch starts no Python worker; ``readBetweenOffsets``
+                    replays an uncommitted batch after a restart
 - Limit=200      -> ``maxFetchRecordsPerShard`` cap applied per shard
-                    per micro-batch in ``latestOffset``
+                    per micro-batch in ``read``
 - TRIM_HORIZON / LATEST -> ``startingPosition`` option handled in
                     ``initialOffset``
 - put_record(PartitionKey=k) -> batch writer that routes each row to
@@ -32,12 +40,13 @@ A record's sequence number is its 0-based position within the shard
 (part files ordered by name), mirroring Kinesis' monotone per-shard
 sequence numbers.
 
-Everything inside reader/writer methods is stdlib-only so the pickled
-class works on any executor without the package installed.
+Reader and writer methods need only the stdlib and pyarrow (which
+PySpark's data source workers import anyway).
 """
 
 from __future__ import annotations
 
+import io
 import itertools
 import json
 import os
@@ -46,12 +55,15 @@ import uuid
 import zlib
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.json as pa_json
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     DataSourceWriter,
     InputPartition,
+    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -102,60 +114,57 @@ def _shard_length(shard_dir: str) -> int:
     return sum(1 for _ in _iter_shard_lines(shard_dir))
 
 
+def _shard_slice(shard_dir: str, start: int, stop: int | None) -> tuple[list, int]:
+    """Lines [start, stop) of the shard (stop None: to its tail), and the
+    number of lines seen. Lines before the slice are counted, never
+    parsed, and reading stops at `stop`; the count is the shard's tail
+    whenever the slice came up short."""
+    lines = _iter_shard_lines(shard_dir)
+    skipped = sum(1 for _ in itertools.islice(lines, start))
+    out = list(itertools.islice(lines, None if stop is None else stop - start))
+    return out, skipped + len(out)
+
+
+_ENVELOPE = pa.schema([("partitionKey", pa.string()), ("data", pa.string())])
+
+
+def _parse_slice(shard_id: str, start: int, lines: list) -> list:
+    """Records start, start + 1, ... of one shard as Arrow RecordBatches
+    (the columnar batch crosses the Python->JVM boundary whole): one
+    vectorised JSON parse of the slice's envelopes, in one block so no
+    record straddles a block boundary."""
+    if not lines:
+        return []
+    payload = "\n".join(lines).encode("utf-8")
+    env = pa_json.read_json(
+        io.BytesIO(payload),
+        read_options=pa_json.ReadOptions(use_threads=False, block_size=len(payload)),
+        parse_options=pa_json.ParseOptions(
+            explicit_schema=_ENVELOPE, unexpected_field_behavior="ignore"
+        ),
+    )
+    # The two generated columns are built from raw buffers: pa.array()
+    # over Python values imports pandas, ~0.4 s on the first read of
+    # every query's source process.
+    n, sid = len(lines), shard_id.encode("utf-8")
+    offsets = np.arange(0, (n + 1) * len(sid), len(sid), dtype=np.int32)
+    shard = pa.Array.from_buffers(
+        pa.string(), n, [None, pa.py_buffer(offsets), pa.py_buffer(sid * n)]
+    )
+    seq = pa.Array.from_buffers(
+        pa.int64(), n, [None, pa.py_buffer(np.arange(start, start + n, dtype=np.int64))]
+    )
+    return pa.Table.from_arrays(
+        [shard, seq, env.column("partitionKey"), env.column("data")],
+        names=["shard_id", "sequence_number", "partition_key", "data"],
+    ).to_batches()
+
+
 @dataclass
 class ShardPartition(InputPartition):
-    """One shard (slice) == one Spark read task."""
+    """One shard == one Spark read task of a batch read."""
 
     shard_dir: str
-    start: int  # inclusive record index
-    end: int  # exclusive; -1 = to end of shard
-
-
-def _read_shard(part: ShardPartition):
-    """Yield the slice as Arrow RecordBatches (the DataSource API's fast
-    path: one columnar batch crosses the Python->JVM boundary instead of
-    per-row pickled tuples — ~3x on million-record shards). Falls back
-    to row tuples if pyarrow is unavailable."""
-    shard_id = os.path.basename(part.shard_dir)
-
-    def rows():
-        # Records before the slice are counted, never parsed: the cost of
-        # a micro-batch stays with its own rows as the stream grows.
-        lines = itertools.islice(
-            _iter_shard_lines(part.shard_dir),
-            part.start,
-            None if part.end < 0 else part.end,
-        )
-        for seq, line in enumerate(lines, part.start):
-            env = json.loads(line)
-            yield (shard_id, seq, env.get("partitionKey"), env.get("data"))
-
-    try:
-        import pyarrow as pa
-    except ImportError:  # pragma: no cover - pyarrow is in the base image
-        yield from rows()
-        return
-
-    schema = pa.schema(
-        [
-            ("shard_id", pa.string()),
-            ("sequence_number", pa.int64()),
-            ("partition_key", pa.string()),
-            ("data", pa.string()),
-        ]
-    )
-    buf = []
-    for row in rows():
-        buf.append(row)
-        if len(buf) >= 10_000:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(col) for col in zip(*buf)], schema=schema
-            )
-            buf = []
-    if buf:
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(col) for col in zip(*buf)], schema=schema
-        )
 
 
 class KinesisSimBatchReader(DataSourceReader):
@@ -163,16 +172,23 @@ class KinesisSimBatchReader(DataSourceReader):
         self.path = path
 
     def partitions(self):
-        return [ShardPartition(d, 0, -1) for d in _shard_dirs(self.path)]
+        return [ShardPartition(d) for d in _shard_dirs(self.path)]
 
     def read(self, partition: ShardPartition):
-        return _read_shard(partition)
+        lines, _ = _shard_slice(partition.shard_dir, 0, None)
+        return iter(_parse_slice(os.path.basename(partition.shard_dir), 0, lines))
 
 
-class KinesisSimStreamReader(DataSourceStreamReader):
+class KinesisSimStreamReader(SimpleDataSourceStreamReader):
     """Micro-batch reader whose offset is the per-shard record index —
     the shard-iterator positions the reference keeps in process memory
     (consumer.py:189-190), made durable by the checkpoint instead.
+
+    `read` runs in the driver's long-lived source process: the engine
+    calls it for the next offset, caches the returned slice and ships it
+    to the JVM with the batch's partition, so a live micro-batch starts
+    no Python worker. `readBetweenOffsets` re-reads an uncommitted batch
+    on restart.
     """
 
     def __init__(self, path: str, starting_position: str, max_fetch: int):
@@ -186,71 +202,41 @@ class KinesisSimStreamReader(DataSourceStreamReader):
             return {os.path.basename(d): _shard_length(d) for d in _shard_dirs(self.path)}
         return {os.path.basename(d): 0 for d in _shard_dirs(self.path)}
 
-    def latestOffset(self) -> dict:
-        # Advance each shard by at most max_fetch records — the
-        # get_records(Limit=200) cap, applied per shard per micro-batch.
-        # The cursor lives on self between calls; after a checkpoint
-        # restart it re-syncs from the engine-provided start offset in
-        # partitions() (one empty batch at worst).
-        cur = getattr(self, "_cursor", None)
-        if cur is None:
-            cur = self.initialOffset()
-        out = {}
+    def read(self, start: dict):
+        # At most max_fetch records per shard: the get_records(Limit=200)
+        # cap, applied per shard per micro-batch.
+        return self._read(start, None)
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        return self._read(start, end)[0]
+
+    def _read(self, start: dict, end: dict | None):
+        # The end offset keeps `start`'s key order: the engine compares
+        # offsets as JSON text, so an idle read must return `start` as is.
+        batches, out = [], dict(start)
         for d in _shard_dirs(self.path):
             sid = os.path.basename(d)
-            tail = _shard_length(d)
-            at = cur.get(sid, 0)
-            out[sid] = min(tail, at + self.max_fetch)
-        self._cursor = out
-        return out
-
-    def partitions(self, start: dict, end: dict):
-        # Stale-checkpoint guard (checked once, on the first engine-
-        # provided offset after construction — i.e. at restart): a
-        # checkpointed offset PAST a shard's tail means the stream was
-        # regenerated/truncated since the checkpoint was written.
-        # Proceeding would silently skip every record below the stale
-        # offset; real Kinesis raises the same way when a stored shard
-        # iterator no longer resolves. O(stream) scan once per restart.
-        if not getattr(self, "_start_validated", False):
-            self._start_validated = True
-            for d in _shard_dirs(self.path):
-                sid = os.path.basename(d)
-                s = start.get(sid, 0)
-                tail = _shard_length(d)
-                if s > tail:
-                    raise RuntimeError(
-                        f"kinesis_sim: checkpointed offset {s} for "
-                        f"{sid} exceeds the shard tail ({tail} records) "
-                        f"in {self.path} — the stream was regenerated or "
-                        "truncated since this checkpoint was written. "
-                        "Delete the checkpoint (full reprocess) or "
-                        "restore the original stream; refusing to "
-                        "silently skip records."
-                    )
-        # Re-sync the rate-limit cursor with the engine's view — after a
-        # restart the checkpointed start can be ahead of our fresh cursor.
-        cur = getattr(self, "_cursor", None) or {}
-        self._cursor = {
-            sid: max(cur.get(sid, 0), start.get(sid, 0), end.get(sid, 0))
-            for sid in set(cur) | set(start) | set(end)
-        }
-        parts = []
-        for d in _shard_dirs(self.path):
-            sid = os.path.basename(d)
-            s, e = start.get(sid, 0), end.get(sid, 0)
-            if e > s:
-                parts.append(ShardPartition(d, s, e))
-        # A batch where no shard advanced still needs >=1 (empty) part.
-        return parts or [ShardPartition(_shard_dirs(self.path)[0], 0, 0)]
-
-    def read(self, partition: ShardPartition):
-        return _read_shard(partition)
-
-    def commit(self, end: dict) -> None:
-        # Offsets are recomputable from the checkpoint; nothing to do —
-        # like Kinesis itself, the "stream" retains records regardless.
-        pass
+            s = start.get(sid, 0)
+            stop = s + self.max_fetch if end is None else end.get(sid, s)
+            lines, seen = _shard_slice(d, s, stop)
+            need = s if end is None else stop
+            if seen < need:
+                # An offset past the shard's tail means the stream was
+                # regenerated or truncated since the checkpoint was
+                # written; proceeding would silently skip every record
+                # below it. Real Kinesis raises the same way when a
+                # stored shard iterator no longer resolves.
+                raise RuntimeError(
+                    f"kinesis_sim: offset {need} for {sid} exceeds the shard "
+                    f"tail ({seen} records) in {self.path} — the stream was "
+                    "regenerated or truncated since this checkpoint was "
+                    "written. Delete the checkpoint (full reprocess) or "
+                    "restore the original stream; refusing to silently "
+                    "skip records."
+                )
+            batches += _parse_slice(sid, s, lines)
+            out[sid] = s + len(lines)
+        return iter(batches), out
 
 
 def _consume_killpoint(stream_dir: str, name: str) -> None:
@@ -508,7 +494,7 @@ class KinesisSimDataSource(DataSource):
     def reader(self, schema: StructType) -> KinesisSimBatchReader:
         return KinesisSimBatchReader(self._path())
 
-    def streamReader(self, schema: StructType) -> KinesisSimStreamReader:
+    def simpleStreamReader(self, schema: StructType) -> KinesisSimStreamReader:
         return KinesisSimStreamReader(
             self._path(),
             self.options.get("startingPosition", "TRIM_HORIZON").upper(),

@@ -23,8 +23,11 @@ plan, incrementalized by the micro-batch engine:
 - state: checkpointed offsets give exactly-once file output, replacing
   the reference's restart-equals-replay behavior (consumer.py:76).
 
-Shard -> partition mapping: each source file/shard becomes input
-partitions processed by parallel tasks; `trigger(processingTime=...)`
+Shard -> partition mapping: each source file of the JSON stream becomes
+input partitions processed by parallel tasks; a live kinesis_sim
+micro-batch is ONE partition, every shard's capped slice read on the
+driver and shipped to the JVM with the batch (no Python worker runs);
+`trigger(processingTime=...)`
 replaces the `time.sleep(2)` pacing (consumer.py:194-195); per-key
 output ordering (partition key session_id, consumer.py:170) is
 preserved by repartitioning on session_id before the sink write.

@@ -475,7 +475,9 @@ def _write_source_stream(stream: str, shards: dict[int, list[list[dict]]]) -> No
 def test_slice_reads_match_full_read_filtered(tmp_path):
     """A slice [start, end) read across part-file boundaries (and past a
     blank line, which holds no sequence number) returns exactly the rows
-    of a full read filtered to the slice."""
+    of a full read filtered to the slice: the stream reader's live
+    `read` (capped) and its replay `readBetweenOffsets` both match the
+    batch reader's full shard scan."""
     stream = str(tmp_path / "stream")
     files = [[{"session_id": f"s{f}-{i}"} for i in range(n)] for f, n in enumerate((3, 1, 4))]
     _write_source_stream(stream, {0: files})
@@ -483,18 +485,21 @@ def test_slice_reads_match_full_read_filtered(tmp_path):
     with open(os.path.join(shard, "part-00000001-src.jsonl"), "a", encoding="utf-8") as fh:
         fh.write("\n")
 
-    def rows(start, end):
-        part = kinesis_sim.ShardPartition(shard, start, end)
-        return [r for b in kinesis_sim._read_shard(part) for r in b.to_pylist()]
+    def rows(batches):
+        return [r for b in batches for r in b.to_pylist()]
 
-    full = rows(0, -1)
+    full = rows(
+        kinesis_sim.KinesisSimBatchReader(stream).read(kinesis_sim.ShardPartition(shard))
+    )
     assert [r["sequence_number"] for r in full] == list(range(8))
-    for start, end in ((0, 0), (0, 3), (2, 5), (3, 4), (4, 8), (5, -1), (7, 8), (8, -1)):
-        want = [
-            r for r in full
-            if r["sequence_number"] >= start and (end < 0 or r["sequence_number"] < end)
-        ]
-        assert rows(start, end) == want, (start, end)
+    for start, end in ((0, 0), (0, 3), (2, 5), (3, 4), (4, 8), (5, 8), (7, 8), (8, 8)):
+        want = [r for r in full if start <= r["sequence_number"] < end]
+        reader = kinesis_sim.KinesisSimStreamReader(stream, "TRIM_HORIZON", end - start)
+        live, offset = reader.read({"shard-00000": start})
+        assert rows(live) == want, (start, end)
+        assert offset == {"shard-00000": end}
+        replay = reader.readBetweenOffsets({"shard-00000": start}, {"shard-00000": end})
+        assert rows(replay) == want, (start, end)
 
 
 def test_routed_sink_rejects_streams_on_two_filesystems(tmp_path, monkeypatch):

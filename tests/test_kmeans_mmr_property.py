@@ -197,3 +197,39 @@ def test_mmr_tie_break_prefers_smallest_id(rel, n):
     sim_of = {(a, b): 0 for a in range(n) for b in range(n) if a != b}
     picks = _mmr_greedy_py(rel_of, sim_of, n)
     assert [p[1] for p in picks] == list(range(n))
+
+
+def test_km_quantized_refuses_short_embeddings(spark, tmp_path):
+    """`_km_assign`'s unrolled distance is NULL past the end of a vector
+    shorter than EMB_DIM, and min_by would then pick an arbitrary
+    cluster: the quantized projection must refuse such an embedding by
+    name instead of letting it through."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from stream_ingestion_amazon_kinesis_spark.operators.similarity import (
+        EMB_DIM,
+        KMEANS_SCALE,
+        _km_quantized,
+    )
+
+    def write(vectors):
+        d = tmp_path / f"sf{len(vectors)}"
+        d.mkdir()
+        emb = pa.table(
+            {
+                "vec_id": pa.array(range(len(vectors)), pa.int64()),
+                "embedding": pa.array(vectors, pa.list_(pa.float32())),
+                "label": pa.array([0] * len(vectors), pa.int32()),
+            }
+        )
+        pq.write_table(emb, str(d / "embeddings.parquet"))
+        return str(d)
+
+    full = [0.25] * EMB_DIM
+    ok = _km_quantized(spark, write([full, full])).collect()
+    assert [len(r["qv"]) for r in ok] == [EMB_DIM, EMB_DIM]
+    assert set(ok[0]["qv"]) == {int(0.25 * KMEANS_SCALE + 0.5)}
+    with pytest.raises(Exception, match=f"vec_id 1 has {EMB_DIM - 1} elements"):
+        _km_quantized(spark, write([full, full[1:], full])).collect()

@@ -66,3 +66,33 @@ def test_prefix_filter_chain_equals_brute_force(spark, docs):
         for r in prefix_filtered_pairs(tok).collect()
     }
     assert got == _brute_force_pairs(docs)
+
+
+def test_prefix_relation_source_is_deterministic_for_two_source_doc(spark):
+    """A doc whose tokens carry two sources gets ONE source in the prefix
+    relation, the least of them, whatever order the rows arrive in —
+    so the pairs `prefix_filtered_pairs` emits for it cannot change
+    from run to run."""
+    import random
+
+    from stream_ingestion_amazon_kinesis_spark.operators.dedup import (
+        _prefix_relation,
+        prefix_filtered_pairs,
+    )
+
+    rows = [(0, "s1", t) for t in "abcd"] + [(0, "s0", "e")]
+    rows += [(1, "s0", t) for t in "abcde"] + [(2, "s1", t) for t in "abcde"]
+    results = set()
+    for seed in range(4):
+        shuffled = random.Random(seed).sample(rows, len(rows))
+        tok = spark.createDataFrame(
+            shuffled, "doc_id long, source string, token string"
+        ).repartition(3)
+        sources = {
+            r["source"] for r in _prefix_relation(tok).collect() if r["doc_id"] == 0
+        }
+        assert sources == {"s0"}
+        results.add(
+            tuple(sorted(tuple(r) for r in prefix_filtered_pairs(tok).collect()))
+        )
+    assert len(results) == 1
