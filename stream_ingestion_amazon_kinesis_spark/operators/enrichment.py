@@ -66,14 +66,6 @@ def route_column() -> Column:
     return F.when(F.col("country") == "USA", "USA").otherwise("International")
 
 
-def route_sessions(enriched: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """T6 demux: the USA and International splits of one plan (the
-    reference's per-record ternary). Callers writing both sides should
-    persist/`foreachBatch` the parent so the source is scanned once."""
-    route = route_column()
-    return enriched.filter(route == "USA"), enriched.filter(route == "International")
-
-
 # ---------------------------------------------------------------------------
 # Fixture-facing flagship query: sessionize `events` into the payload
 # shape, then run the exact T2/T3/T4 folds. Deterministic (no T1 column)

@@ -10,8 +10,8 @@ directory to approximately `target_bytes` files:
   counts), so heavily-compressed columns don't over-merge;
 - the rewrite goes to a sibling temp dir first and is swapped in only
   after a `_SUCCESS` marker lands — a crash mid-compaction leaves the
-  original directory untouched (same idempotence discipline as
-  streaming/idempotent_sink.py);
+  original directory untouched (the marker-commit discipline of
+  sources/kinesis_sim.publish);
 - row order inside each output file follows an optional sort column so
   compaction can simultaneously tighten min/max stats (the layout.py
   z-order lesson: stats-tight files prune better).

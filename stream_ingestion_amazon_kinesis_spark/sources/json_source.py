@@ -43,17 +43,23 @@ SESSION_SCHEMA = T.StructType(
 
 CORRUPT_COL = "_corrupt_record"
 
+# The decode shape of every session source: SESSION_SCHEMA plus the
+# column a PERMISSIVE parse fills with the raw text of a malformed record.
+SESSION_RECORD_SCHEMA = T.StructType(
+    list(SESSION_SCHEMA.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
+)
+PERMISSIVE = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
+
 
 def parse_json_records(
     raw: DataFrame,
-    schema: T.StructType = SESSION_SCHEMA,
     value_col: str = "value",
 ) -> tuple[DataFrame, DataFrame]:
     """bytes/str JSON column -> (parsed, quarantine).
 
     `raw` carries one JSON document per row in `value_col` (BinaryType or
     StringType — the Kinesis/Kafka wire shape). Returns the parsed rows
-    with the declared schema, and the quarantine rows (unparseable JSON)
+    with SESSION_SCHEMA, and the quarantine rows (unparseable JSON)
     carrying the original payload — the engine's version of the
     reference's drop-with-log path (consumer.py:178-185).
     """
@@ -61,12 +67,8 @@ def parse_json_records(
     if dict(raw.dtypes)[value_col] == "binary":
         value = value.cast("string")
 
-    schema_with_corrupt = T.StructType(
-        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
-    )
     parsed_raw = raw.withColumn(
-        "_parsed",
-        F.from_json(value, schema_with_corrupt, {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}),
+        "_parsed", F.from_json(value, SESSION_RECORD_SCHEMA, PERMISSIVE)
     )
     # from_json yields NULL struct for totally unparseable input and sets
     # _corrupt_record when it salvages nothing; treat both as quarantine.

@@ -406,22 +406,11 @@ class KinesisSimWriter(DataSourceWriter):
     Spark's two-phase commit standing in for the service-side append.
     """
 
-    def __init__(
-        self,
-        path: str,
-        num_shards: int,
-        key_col: str,
-        data_col: str,
-        commit_token: str | None = None,
-    ):
+    def __init__(self, path: str, num_shards: int, key_col: str, data_col: str):
         self.path = path
         self.num_shards = num_shards
         self.key_col = key_col
         self.data_col = data_col
-        # Idempotence token for epoch retries (option commitToken), with
-        # the protocol of `publish`. None (plain batch writes) keeps the
-        # plain append behavior.
-        self.commit_token = commit_token
 
     def write(self, iterator) -> ShardWriteCommit:
         task_id = uuid.uuid4().hex[:12]
@@ -450,7 +439,7 @@ class KinesisSimWriter(DataSourceWriter):
         publish(
             self.path,
             [f for msg in messages if msg is not None for f in msg.files],
-            self.commit_token,
+            None,
         )
         staging = os.path.join(self.path, "_staging")
         if os.path.isdir(staging) and not os.listdir(staging):
@@ -512,7 +501,6 @@ class KinesisSimDataSource(DataSource):
             int(self.options.get("numShards", "4")),
             self.options.get("partitionKeyColumn", "partition_key"),
             self.options.get("dataColumn", "data"),
-            self.options.get("committoken") or self.options.get("commitToken"),
         )
 
 

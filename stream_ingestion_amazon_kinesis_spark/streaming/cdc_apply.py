@@ -11,8 +11,8 @@ flips a pointer file — the classic copy-on-write table layout:
 
 Idempotence: an epoch whose version directory already exists is a
 replay (foreachBatch retry or checkpoint restart) and is skipped, so
-the merge applies exactly once per epoch — the same epoch-marker
-protocol as streaming/idempotent_sink.py. Readers resolve _LATEST and
+the merge applies exactly once per epoch — the same skip-a-done-epoch
+rule as the done-marker of sources/kinesis_sim.publish. Readers resolve _LATEST and
 get a consistent snapshot regardless of in-flight merges.
 """
 

@@ -14,14 +14,14 @@ plan, incrementalized by the micro-batch engine:
 - transform: the exact T1-T6 enrichment from operators/enrichment.py —
   same code object as the batch path, which is what makes streaming
   results oracle-checkable by batch replay.
-- sink: `foreachBatch` demux to BOTH routes (the reference
-  re-serializes record-at-a-time, consumer.py:160-171). The kinesis_sim
-  destination collects the whole routed micro-batch with one Spark job,
-  then stages and publishes each route on the driver; the file
-  destination writes each route and the quarantine from a cached
-  micro-batch.
-- state: checkpointed offsets give exactly-once file output, replacing
-  the reference's restart-equals-replay behavior (consumer.py:76).
+- sink: `foreachBatch` demux to BOTH routes plus a quarantine (the
+  reference re-serializes record-at-a-time, consumer.py:160-171, and
+  drops malformed records with a log line, consumer.py:177-185). One
+  Spark job collects the whole routed micro-batch; the driver then
+  stages and publishes each route with the batch's commit token.
+- state: checkpointed offsets plus the epoch-idempotent publish give
+  exactly-once output, replacing the reference's restart-equals-replay
+  behavior (consumer.py:76).
 
 Shard -> partition mapping: each source file of the JSON stream becomes
 input partitions processed by parallel tasks; a live kinesis_sim
@@ -30,7 +30,7 @@ driver and shipped to the JVM with the batch (no Python worker runs);
 `trigger(processingTime=...)`
 replaces the `time.sleep(2)` pacing (consumer.py:194-195); per-key
 output ordering (partition key session_id, consumer.py:170) is
-preserved by repartitioning on session_id before the sink write.
+preserved by staging the collected rows in order.
 """
 
 from __future__ import annotations
@@ -44,43 +44,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.enrichment import (
-    ROUTES,
-    enrich_sessions,
-    route_column,
-    route_sessions,
-)
-from ..sources.json_source import CORRUPT_COL, SESSION_SCHEMA
-
-
-def produce_records(
-    spark: SparkSession,
-    records: list[dict],
-    stream_dir: str,
-    partition_key: str = "session_id",
-) -> None:
-    """Producer twin of the reference's put_record loop
-    (producer_from_cli_my_modifications.py:44-52): append records as a
-    new JSON file in the stream directory, repartitioned by the
-    partition key so per-key records land together — the file-source
-    analog of PartitionKey shard routing."""
-    import json as _json
-    import uuid as _uuid
-
-    rows = [( _json.dumps(r), r.get(partition_key, "")) for r in records]
-    df = spark.createDataFrame(rows, "value string, pk string")
-    (
-        df.repartition(F.col("pk"))
-        .select("value")
-        .write.mode("append")
-        .text(os.path.join(stream_dir, f"batch-{_uuid.uuid4().hex[:8]}"))
-    )
+from ..operators.enrichment import ROUTES, enrich_sessions, route_column
+from ..sources.json_source import CORRUPT_COL, PERMISSIVE, SESSION_RECORD_SCHEMA
 
 
 def read_session_stream(
     spark: SparkSession,
     input_dir: str,
-    schema: T.StructType = SESSION_SCHEMA,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming source of JSON session records.
@@ -90,72 +60,10 @@ def read_session_stream(
     `maxFilesPerTrigger` option is the file-source analog of the
     reference's `Limit=200` fetch cap (consumer.py:114-116).
     """
-    schema_with_corrupt = T.StructType(
-        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
-    )
-    reader = (
-        spark.readStream.schema(schema_with_corrupt)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-    )
+    reader = spark.readStream.schema(SESSION_RECORD_SCHEMA).options(**PERMISSIVE)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.json(input_dir)
-
-
-def enrichment_sink(output_dir: str):
-    """foreachBatch body: split one cached micro-batch into the two
-    routed sinks + quarantine (T6 demux, consumer.py:160-165, with
-    exactly-once file commits instead of per-record put_record)."""
-
-    def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        batch.persist()
-        try:
-            ok = batch.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-            quarantine = batch.filter(F.col(CORRUPT_COL).isNotNull()).select(
-                F.col(CORRUPT_COL).alias("raw_record")
-            )
-            # T7: partition-key locality on session_id before the write —
-            # the file-sink equivalent of put_record(PartitionKey=...).
-            for name, part in zip(
-                ("usa", "international"), route_sessions(enrich_sessions(ok))
-            ):
-                (
-                    part.repartition(F.col("session_id"))
-                    .write.mode("append")
-                    .json(os.path.join(output_dir, name))
-                )
-            quarantine.write.mode("append").json(os.path.join(output_dir, "errors"))
-        finally:
-            batch.unpersist()
-
-    return write_batch
-
-
-def run_enrichment_pipeline(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    trigger_seconds: int = 2,
-    await_all_available: bool = False,
-):
-    """The flagship pipeline end-to-end (consumer.py main loop as one
-    streaming query). Returns the started StreamingQuery.
-
-    `trigger_seconds` mirrors the reference's sleep(2) sweep pacing;
-    `checkpoint_dir` is what upgrades at-least-once/replay-everything
-    (consumer.py:76) to exactly-once."""
-    stream = read_session_stream(spark, input_dir)
-    query = (
-        stream.writeStream.foreachBatch(enrichment_sink(output_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-    if await_all_available:
-        query.processAllAvailable()
-    return query
 
 
 # ---------------------------------------------------------------------------
@@ -264,6 +172,11 @@ def run_to_memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
     return query
 
 
+# Route of a malformed record, and the name of its stream under the
+# USA destination stream: the analog of the Firehose `errors/` prefix.
+QUARANTINE = "_quarantine"
+
+
 def kinesis_sim_sink(
     dest_streams: dict[str, str],
     num_shards: int = 4,
@@ -282,6 +195,13 @@ def kinesis_sim_sink(
     ``<run_scope>e<epoch>`` makes an epoch retry converge to one copy.
     Markers and tokens are scoped to the checkpoint identity (`run_scope`):
     epoch ids restart at 0 under a fresh checkpoint.
+
+    A record whose `_corrupt_record` is set is quarantined instead of
+    routed: its raw text is the envelope's data, its key the
+    `key_column` of its session_id (null after a failed parse, so
+    'None'), and it is published with the same token to the stream
+    `<USA stream>/_quarantine`. Readers of the USA stream list only its
+    `shard-*` directories, so they never see it.
 
     `dest_streams` maps route name ('USA'/'International') to a stream
     directory; the directories are created here and must sit on one
@@ -317,6 +237,7 @@ def kinesis_sim_sink(
     # stream dir: torn WAL with nothing / one route / both routes
     # published. No-ops in normal operation.
     first = routes[0][1]
+    routes.append((QUARANTINE, os.path.join(first, QUARANTINE)))
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         token = f"{run_scope}e{epoch_id:020d}"
@@ -325,17 +246,18 @@ def kinesis_sim_sink(
         try:
             if not all(is_published(path, token) for _route, path in routes):
                 shutil.rmtree(stage_dir, ignore_errors=True)
-                ok = batch.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-                enriched = enrich_sessions(ok)
+                enriched = enrich_sessions(batch)
+                corrupt = F.col(CORRUPT_COL)
+                record = F.struct(*[c for c in enriched.columns if c != CORRUPT_COL])
                 key = key_column(F.col("session_id"))
                 envelope = F.struct(
                     key.alias("partitionKey"),
-                    F.to_json(F.struct(*enriched.columns)).alias("data"),
+                    F.coalesce(corrupt, F.to_json(record)).alias("data"),
                 )
                 staged = _stage(
                     stage_dir,
                     enriched.select(
-                        route_column(),
+                        F.when(corrupt.isNull(), route_column()).otherwise(QUARANTINE),
                         shard_column(key, num_shards),
                         F.to_json(envelope),
                     ).collect(),
@@ -385,18 +307,11 @@ def read_session_stream_kinesis_sim(
     from ..sources.kinesis_sim import register_format
 
     register_format(spark)
-    schema_with_corrupt = T.StructType(
-        list(SESSION_SCHEMA.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
-    )
     raw = (
         spark.readStream.format("kinesis_sim").option("path", stream_dir).load()
     )
     return raw.select(
-        F.from_json(
-            "data",
-            schema_with_corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ).alias("r")
+        F.from_json("data", SESSION_RECORD_SCHEMA, PERMISSIVE).alias("r")
     ).select("r.*")
 
 

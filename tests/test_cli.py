@@ -315,7 +315,7 @@ KILL_DRILLS = (
     # landing and checkpoint commit" moment)
     ("_killpoint_before_publish", "USA"),
     # publish mid-loop: SOME of the route's files published — the torn
-    # publish only the commitToken rollback can repair
+    # publish only the commit-token rollback in `publish` can repair
     ("_killpoint_mid_publish", "USA"),
     # first route published + done-marker, second route never started
     ("_killpoint_between_routes", "USA"),
@@ -336,18 +336,20 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
     genuinely torn state: staged files, half-published epochs, offset
     WAL ahead of the commit log. Runs each drill as a real
     `python -m ... etl` subprocess (1 GiB driver); the armed runs and
-    the restarts are each launched concurrently to bound wall time."""
+    the restarts are each launched concurrently to bound wall time.
+    One malformed payload rides along: every drill must also leave it
+    exactly once in the quarantine stream under the USA stream."""
     import subprocess
     import sys
     import time
 
     n_recs = 6
-    expected = {}  # route dir name -> set of session ids
     records = []
     for i in range(n_recs):
         country = "USA" if i % 3 != 2 else "Peru"
         rec = dict(RECORD, session_id=f"s-k{i}", country=country)
         records.append(rec)
+    malformed = '{"session_id": "s-kbad", "country": "US'
 
     def make_topo(kp: str, route: str):
         base = tmp_path / f"{kp.strip('_')}-{route}"
@@ -355,20 +357,22 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
             str(base / d) for d in ("stream", "usa", "intl", "ckpt")
         )
         # Source stream written directly in the kinesis_sim layout (no
-        # Spark needed): 2 shards x 3 records.
+        # Spark needed): 2 shards x 3 records, the malformed payload last
+        # in shard 1.
         for shard in (0, 1):
             d = os.path.join(stream, f"shard-{shard:05d}")
             os.makedirs(d)
+            envs = [
+                {"partitionKey": rec["session_id"], "data": json.dumps(rec)}
+                for rec in records[shard * 3 : shard * 3 + 3]
+            ]
+            if shard == 1:
+                envs.append({"partitionKey": "s-kbad", "data": malformed})
             with open(
                 os.path.join(d, f"part-{0:08d}-src.jsonl"), "w", encoding="utf-8"
             ) as fh:
-                for rec in records[shard * 3 : shard * 3 + 3]:
-                    fh.write(
-                        json.dumps(
-                            {"partitionKey": rec["session_id"], "data": json.dumps(rec)}
-                        )
-                        + "\n"
-                    )
+                for env_rec in envs:
+                    fh.write(json.dumps(env_rec) + "\n")
         os.makedirs(usa)
         os.makedirs(intl)
         armed_dir = usa if route == "USA" else intl
@@ -435,7 +439,7 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
     for drill, code in restarted.items():
         assert code == 0, f"{drill}: restart exited {code}"
 
-    def stream_sessions(dest: str) -> list[str]:
+    def stream_payloads(dest: str) -> list[str]:
         out = []
         if not os.path.isdir(dest):
             return out
@@ -448,11 +452,11 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
                 with open(os.path.join(dest, d, f), encoding="utf-8") as fh:
                     for line in fh:
                         if line.strip():
-                            env_rec = json.loads(line)
-                            out.append(
-                                json.loads(env_rec["data"])["session_id"]
-                            )
+                            out.append(json.loads(line)["data"])
         return out
+
+    def stream_sessions(dest: str) -> list[str]:
+        return [json.loads(data)["session_id"] for data in stream_payloads(dest)]
 
     want_usa = sorted(r["session_id"] for r in records if r["country"] == "USA")
     want_intl = sorted(r["session_id"] for r in records if r["country"] != "USA")
@@ -460,6 +464,8 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
         _, usa, intl, _ = topos[drill]
         assert sorted(stream_sessions(usa)) == want_usa, f"{drill}: USA not exactly-once"
         assert sorted(stream_sessions(intl)) == want_intl, f"{drill}: intl not exactly-once"
+        quarantined = stream_payloads(os.path.join(usa, "_quarantine"))
+        assert quarantined == [malformed], f"{drill}: quarantine not exactly-once"
 
 
 def test_cli_etl_partial_epoch_retry_skips_committed_route(tmp_path, spark, capsys):

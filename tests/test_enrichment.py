@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from stream_ingestion_amazon_kinesis_spark.operators.enrichment import (
     enrich_sessions,
-    route_sessions,
+    route_column,
 )
 from stream_ingestion_amazon_kinesis_spark.sources.json_source import (
     parse_json_records,
@@ -93,8 +93,9 @@ def test_routing_demux(spark):
         spark.createDataFrame([(json.dumps(null_country),)], "value string")
     )
     ok, _ = parse_json_records(raw)
-    enriched = enrich_sessions(ok)
-    usa, intl = route_sessions(enriched)
+    enriched = enrich_sessions(ok).withColumn("route", route_column())
+    usa = enriched.filter(F.col("route") == "USA")
+    intl = enriched.filter(F.col("route") == "International")
     assert [r["session_id"] for r in usa.select("session_id").collect()] == ["s1"]
     assert sorted(r["session_id"] for r in intl.select("session_id").collect()) == [
         "s2",

@@ -397,8 +397,8 @@ def test_stale_checkpoint_offsets_past_tail_fail_loudly(spark, tmp_path):
         q2.processAllAvailable()
 
 
-def test_commit_token_makes_appends_idempotent(spark, tmp_path):
-    """Round-7 exactly-once hardening: a write carrying commitToken T
+def test_commit_token_makes_appends_idempotent(tmp_path):
+    """Exactly-once hardening: a publish carrying commit token T
     (the streaming sink's (checkpoint-scope, epoch) identity) converges
     to exactly one copy across retries — (a) a retry after the writer
     done-marker landed publishes nothing; (b) a retry after a TORN
@@ -407,36 +407,44 @@ def test_commit_token_makes_appends_idempotent(spark, tmp_path):
     different token appends normally."""
     import json as _json
 
-    kinesis_sim.register_format(spark)
     path = str(tmp_path / "stream")
+    staging = str(tmp_path / "stream" / "_staging")
+    os.makedirs(staging)
+
+    def stage(token):
+        """10 records staged as one file per shard, routed like the writer."""
+        staged = {}
+        for i in range(10):
+            key = f"k-{i}"
+            shard = kinesis_sim.shard_of(key, 4)
+            if shard not in staged:
+                rel = os.path.join(f"shard-{shard:05d}", "part-t.jsonl")
+                staged[shard] = (rel, os.path.join(staging, f"{token}-{shard:05d}.jsonl"))
+            with open(staged[shard][1], "a", encoding="utf-8") as fh:
+                fh.write(_json.dumps({"partitionKey": key, "data": _json.dumps({"id": i})}) + "\n")
+        return list(staged.values())
 
     def write(token):
-        df = spark.range(10).select(
-            F.concat(F.lit("k-"), F.col("id").cast("string")).alias("partition_key"),
-            F.to_json(F.struct("id")).alias("data"),
-        )
-        (
-            df.write.format("kinesis_sim")
-            .option("path", path)
-            .option("numShards", "4")
-            .option("commitToken", token)
-            .mode("append")
-            .save()
-        )
+        kinesis_sim.publish(path, stage(token), token)
 
-    def n_records():
-        return (
-            spark.read.format("kinesis_sim").option("path", path).load().count()
-        )
+    def records():
+        return [
+            (os.path.basename(d), line)
+            for d in kinesis_sim._shard_dirs(path)
+            for line in kinesis_sim._iter_shard_lines(d)
+        ]
 
     write("scopeAe1")
-    assert n_records() == 10
+    first = records()
+    assert len(first) == 10
     marker = os.path.join(path, "_epochs", "w-scopeAe1")
     assert os.path.exists(marker)
 
-    # (a) full retry with the marker present: publish skipped
+    # (a) full retry with the marker present: publish skipped, and the
+    # staged files it was handed are dropped
     write("scopeAe1")
-    assert n_records() == 10
+    assert records() == first
+    assert os.listdir(staging) == []
 
     # (b) torn attempt: marker gone, token files still published — the
     # retry must roll them back and republish, not double-append
@@ -449,17 +457,18 @@ def test_commit_token_makes_appends_idempotent(spark, tmp_path):
     ]
     assert token_files_before  # the token is actually in the file names
     write("scopeAe1")
-    assert n_records() == 10
+    assert records() == first
     assert os.path.exists(marker)
 
     # (c) a new token appends
     write("scopeAe2")
-    assert n_records() == 20
+    assert len(records()) == 20
 
 
-def _write_source_stream(stream: str, shards: dict[int, list[list[dict]]]) -> None:
+def _write_source_stream(stream: str, shards: dict[int, list[list]]) -> None:
     """A kinesis_sim stream written directly in its on-disk layout: for
-    each shard, one part file per list of records."""
+    each shard, one part file per list of records. A record is a session
+    dict, or a str put on the wire as is (a malformed payload)."""
     import json
 
     for shard, files in shards.items():
@@ -468,7 +477,10 @@ def _write_source_stream(stream: str, shards: dict[int, list[list[dict]]]) -> No
         for i, recs in enumerate(files):
             with open(os.path.join(d, f"part-{i:08d}-src.jsonl"), "w", encoding="utf-8") as fh:
                 for rec in recs:
-                    env = {"partitionKey": rec["session_id"], "data": json.dumps(rec)}
+                    if isinstance(rec, str):
+                        env = {"partitionKey": "malformed", "data": rec}
+                    else:
+                        env = {"partitionKey": rec["session_id"], "data": json.dumps(rec)}
                     fh.write(json.dumps(env) + "\n")
 
 
@@ -576,15 +588,33 @@ def _session(sid: str, country, n: int) -> dict:
 
 
 def test_routed_sink_one_job_per_micro_batch(spark, tmp_path, monkeypatch):
-    """Structure pin: each non-empty micro-batch stages both routes with
-    ONE Spark job, and publishing leaves no staging directory behind."""
+    """Structure pin: each non-empty micro-batch stages both routes and
+    the quarantine with ONE Spark job, and publishing leaves no staging
+    directory behind. The malformed record lands once in the quarantine
+    stream under the USA stream, and a read of the USA stream (which
+    lists only its shard-* directories) does not see it."""
+    import json
+
+    bad = '{"session_id": "b-bad", "country": "US'
     shards = {
         0: [[_session(f"a{i}", "USA" if i % 2 else "Peru", i) for i in range(40)]],
-        1: [[_session(f"b{i}", "USA" if i % 3 else "Chile", i) for i in range(40)]],
+        1: [[_session(f"b{i}", "USA" if i % 3 else "Chile", i) for i in range(40)] + [bad]],
     }
-    _dest, jobs, staging = _run_routed_pipeline(spark, tmp_path, shards, monkeypatch)
+    dest, jobs, staging = _run_routed_pipeline(spark, tmp_path, shards, monkeypatch)
     assert jobs and [len(j) for j in jobs] == [1] * len(jobs)
     assert staging == []
+
+    def payloads(path):
+        return [
+            r.data for r in spark.read.format("kinesis_sim").option("path", path).load().collect()
+        ]
+
+    assert payloads(os.path.join(dest["USA"], "_quarantine")) == [bad]
+    usa = payloads(dest["USA"])
+    assert bad not in usa
+    assert sorted(json.loads(d)["session_id"] for d in usa) == sorted(
+        [f"a{i}" for i in range(40) if i % 2] + [f"b{i}" for i in range(40) if i % 3]
+    )
 
 
 def test_routed_sink_null_country_and_per_key_order(spark, tmp_path, monkeypatch):

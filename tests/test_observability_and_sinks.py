@@ -1,8 +1,7 @@
-"""Partition pruning, progress listener (S10 parity), idempotent sink."""
+"""Partition pruning and the progress listener (S10 parity)."""
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import functions as F
@@ -11,10 +10,6 @@ from stream_ingestion_amazon_kinesis_spark.sources.catalog import load_table
 from stream_ingestion_amazon_kinesis_spark.sources.partitioned import (
     read_month,
     write_partitioned_by_month,
-)
-from stream_ingestion_amazon_kinesis_spark.streaming.idempotent_sink import (
-    committed_epoch_dirs,
-    idempotent_epoch_sink,
 )
 from stream_ingestion_amazon_kinesis_spark.streaming.observability import (
     attach_progress_log,
@@ -116,20 +111,3 @@ def test_observe_streaming_metrics_in_progress(spark, sf_dir, tmp_path):
     q.stop()
     assert sum(m["n_rows"] for m in seen) == 80
     assert all(m["n_null_keys"] == 0 for m in seen)
-
-
-def test_idempotent_sink_skips_retried_epoch(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "epochs")
-    sink = idempotent_epoch_sink(out)
-    batch = load_table(spark, sf_dir, "events").limit(10)
-    sink(batch, epoch_id=7)
-    first_mtime = os.path.getmtime(os.path.join(out, "epoch=7", "_COMMITTED"))
-    # simulate the engine retrying epoch 7 after a failure
-    sink(batch, epoch_id=7)
-    assert os.path.getmtime(os.path.join(out, "epoch=7", "_COMMITTED")) == first_mtime
-    sink(batch, epoch_id=8)
-    assert [os.path.basename(p) for p in committed_epoch_dirs(out)] == [
-        "epoch=7",
-        "epoch=8",
-    ]
-    assert spark.read.json(committed_epoch_dirs(out)).count() == 20

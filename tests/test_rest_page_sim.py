@@ -136,10 +136,11 @@ def test_index_persisted_and_reused_across_restart(spark, tmp_path):
     # foreachBatch is at-least-once per EPOCH: if stop() lands between
     # the sink call and the offset commit, the same epoch id replays on
     # restart. The exactly-once contract is "idempotent sink keyed by
-    # epoch id" (what streaming/idempotent_sink.py implements) — so the
-    # counter here is a dict keyed by batch id, and a replay overwrites
-    # instead of double-counting. Epoch ids continue across restarts
-    # from the same checkpoint, so the keying is globally consistent.
+    # epoch id" (what kinesis_sim.publish's commit token implements) —
+    # so the counter here is a dict keyed by batch id, and a replay
+    # overwrites instead of double-counting. Epoch ids continue across
+    # restarts from the same checkpoint, so the keying is globally
+    # consistent.
     totals: dict[int, int] = {}
 
     def run_until(target: int) -> None:

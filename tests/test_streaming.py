@@ -12,14 +12,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from stream_ingestion_amazon_kinesis_spark.operators.enrichment import enrich_sessions
+from stream_ingestion_amazon_kinesis_spark.sources import kinesis_sim
 from stream_ingestion_amazon_kinesis_spark.sources.catalog import load_table
 from stream_ingestion_amazon_kinesis_spark.sources.json_source import parse_json_records
 from stream_ingestion_amazon_kinesis_spark.streaming import (
     dedup_event_stream,
     read_event_stream,
-    run_enrichment_pipeline,
     run_to_memory_sink,
     windowed_event_counts,
+)
+from stream_ingestion_amazon_kinesis_spark.streaming.pipeline import (
+    run_kinesis_sim_pipeline,
 )
 from stream_ingestion_amazon_kinesis_spark.streaming.stateful import running_user_profiles
 
@@ -52,15 +55,32 @@ def session_dir(tmp_path):
     return str(d)
 
 
-def test_enrichment_pipeline_end_to_end(spark, tmp_path, session_dir):
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = run_enrichment_pipeline(spark, session_dir, out, ckpt, await_all_available=True)
+def _run_pipeline(spark, tmp_path, session_dir) -> dict[str, list[str]]:
+    """Run the reference topology over the JSON session files to
+    completion; return the `data` payloads of the USA, International and
+    quarantine streams."""
+    usa = str(tmp_path / "usa")
+    dest = {"USA": usa, "International": str(tmp_path / "intl")}
+    q = run_kinesis_sim_pipeline(
+        spark, session_dir, dest, str(tmp_path / "ckpt"), await_all_available=True
+    )
     q.stop()
+    kinesis_sim.register_format(spark)
+    paths = dict(dest, quarantine=os.path.join(usa, "_quarantine"))
+    return {
+        route: [
+            r.data
+            for r in spark.read.format("kinesis_sim").option("path", path).load().collect()
+        ]
+        for route, path in paths.items()
+    }
 
-    usa = spark.read.json(os.path.join(out, "usa"))
-    intl = spark.read.json(os.path.join(out, "international"))
-    errors = spark.read.json(os.path.join(out, "errors"))
+
+def test_enrichment_pipeline_end_to_end(spark, tmp_path, session_dir):
+    out = _run_pipeline(spark, tmp_path, session_dir)
+    usa = [json.loads(d) for d in out["USA"]]
+    intl = [json.loads(d) for d in out["International"]]
+    errors = out["quarantine"]
 
     # batch replay of the identical logic over the identical files
     raw = spark.read.text(session_dir).withColumnRenamed("value", "value")
@@ -69,14 +89,15 @@ def test_enrichment_pipeline_end_to_end(spark, tmp_path, session_dir):
     exp_usa = expected.filter(F.col("country") == "USA")
     exp_intl = expected.filter(F.col("country") != "USA")
 
-    assert usa.count() == exp_usa.count()
-    assert intl.count() == exp_intl.count()
-    assert errors.count() == quarantine.count() == 1
+    assert len(usa) == exp_usa.count()
+    assert len(intl) == exp_intl.count()
+    assert len(errors) == quarantine.count() == 1
+    assert errors == ["{definitely not json"]
 
     # spot-check enrichment values match the batch plan per session
     got = {
         r["session_id"]: (r["overall_product_quantity"], r["overall_in_shopping_cart"])
-        for r in usa.collect() + intl.collect()
+        for r in usa + intl
     }
     exp = {
         r["session_id"]: (r["overall_product_quantity"], r["overall_in_shopping_cart"])
@@ -86,16 +107,10 @@ def test_enrichment_pipeline_end_to_end(spark, tmp_path, session_dir):
 
 
 def test_enrichment_pipeline_exactly_once_on_restart(spark, tmp_path, session_dir):
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = run_enrichment_pipeline(spark, session_dir, out, ckpt, await_all_available=True)
-    q.stop()
-    n1 = spark.read.json(os.path.join(out, "usa")).count()
+    n1 = {k: len(v) for k, v in _run_pipeline(spark, tmp_path, session_dir).items()}
     # restart with the same checkpoint: no re-processing (vs the
     # reference's TRIM_HORIZON full replay, consumer.py:76)
-    q2 = run_enrichment_pipeline(spark, session_dir, out, ckpt, await_all_available=True)
-    q2.stop()
-    n2 = spark.read.json(os.path.join(out, "usa")).count()
+    n2 = {k: len(v) for k, v in _run_pipeline(spark, tmp_path, session_dir).items()}
     assert n1 == n2
 
 
@@ -168,25 +183,6 @@ def test_stateful_running_profiles(spark, sf_dir, tmp_path):
     )
     exp = {r["user_id"]: (r["n"], round(r["v"], 6)) for r in batch.collect()}
     assert got == exp
-
-
-def test_produce_records_feeds_pipeline(spark, tmp_path):
-    from stream_ingestion_amazon_kinesis_spark.streaming.pipeline import produce_records
-
-    ind = str(tmp_path / "in")
-    produce_records(spark, SESSIONS[:5], ind)
-    produce_records(spark, SESSIONS[5:10], ind)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = run_enrichment_pipeline(spark, f"{ind}/*", out, ckpt, await_all_available=True)
-    q.stop()
-    import glob
-
-    total = sum(
-        spark.read.json(p).count()
-        for p in (os.path.join(out, "usa"), os.path.join(out, "international"))
-        if glob.glob(p + "/*")
-    )
-    assert total == 10
 
 
 def test_stream_dedup_with_rocksdb_state_store(spark, sf_dir, tmp_path):
