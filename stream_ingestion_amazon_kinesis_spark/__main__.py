@@ -146,61 +146,11 @@ def cmd_consume(args: argparse.Namespace) -> int:
     return 0
 
 
-def _source_manifest(source_dir: str) -> dict[str, str]:
-    """size:mtime_ns of every file under the source stream — the
-    append-only contract. New files appearing later are fine (that's an
-    append); a file from this snapshot changing or vanishing means the
-    stream was REGENERATED and any checkpoint over it is stale."""
-    out: dict[str, str] = {}
-    for root, _dirs, files in os.walk(source_dir):
-        for f in sorted(files):
-            p = os.path.join(root, f)
-            st = os.stat(p)
-            out[os.path.relpath(p, source_dir)] = f"{st.st_size}:{st.st_mtime_ns}"
-    return out
-
-
-def _guard_stale_checkpoint(checkpoint: str, source_dir: str) -> None:
-    """Fail LOUDLY when a reused checkpoint no longer matches the source
-    stream's content (the stream was deleted + regenerated at the same
-    path — has happened twice in this repo's fixture history). Without
-    this, file-source checkpoints silently skip same-named files and
-    kinesis_sim checkpoints silently skip up to the old offsets —
-    breaking the exactly-once claim with no error. Appends (new files
-    only) pass; any mutation or removal of a previously-seen file
-    refuses to run."""
-    manifest_path = os.path.join(checkpoint, "_source_manifest.json")
-    current = _source_manifest(source_dir)
-    if os.path.exists(manifest_path):
-        with open(manifest_path, encoding="utf-8") as fh:
-            seen = json.load(fh)
-        changed = sorted(
-            rel for rel, sig in seen.items() if current.get(rel) != sig
-        )
-        if changed:
-            raise RuntimeError(
-                f"stale checkpoint {checkpoint}: source stream "
-                f"{source_dir} was regenerated since the last run "
-                f"({len(changed)} previously-seen file(s) changed or "
-                f"vanished, e.g. {changed[0]!r}). Reprocessing with this "
-                "checkpoint would silently skip records. Pass a fresh "
-                "--checkpoint (and clean destination streams), or delete "
-                "the checkpoint directory to reprocess from scratch."
-            )
-
-
-def _record_source_manifest(checkpoint: str, source_dir: str) -> None:
-    os.makedirs(checkpoint, exist_ok=True)
-    with open(
-        os.path.join(checkpoint, "_source_manifest.json"), "w", encoding="utf-8"
-    ) as fh:
-        json.dump(_source_manifest(source_dir), fh, sort_keys=True)
-
-
 def cmd_etl(args: argparse.Namespace) -> int:
     """The flagship topology (consumer.py:108-195): source stream ->
     enrichment -> country demux -> two destination streams, exactly-once
     via checkpoint."""
+    from .sources.kinesis_sim import StaleCheckpointError
     from .streaming.pipeline import run_kinesis_sim_pipeline
 
     dest = json.loads(args.dest_streams)
@@ -217,22 +167,15 @@ def cmd_etl(args: argparse.Namespace) -> int:
         checkpoint = os.path.join(
             tempfile.gettempdir(), f"etl-ckpt-{topo}"
         )
+    spark = _get_spark("cli-etl")
     try:
-        _guard_stale_checkpoint(checkpoint, args.source_stream)
-    except RuntimeError as e:
+        query = run_kinesis_sim_pipeline(
+            spark, args.source_stream, dest, checkpoint, await_all_available=True
+        )
+    except StaleCheckpointError as e:
         print(f"error: {e}", file=sys.stderr)
         return 2
-    spark = _get_spark("cli-etl")
-    query = run_kinesis_sim_pipeline(
-        spark,
-        args.source_stream,
-        dest,
-        checkpoint,
-        await_all_available=True,
-        source_format=args.source_format,
-    )
     query.stop()
-    _record_source_manifest(checkpoint, args.source_stream)
     print(f"drained {args.source_stream} -> {dest} (checkpoint {checkpoint})")
     return 0
 
@@ -272,9 +215,6 @@ def build_parser() -> argparse.ArgumentParser:
     tp.add_argument("--source-stream", required=True)
     tp.add_argument("--dest-streams", required=True)
     tp.add_argument("--checkpoint", default=None)
-    tp.add_argument(
-        "--source-format", choices=("json", "kinesis_sim"), default="json"
-    )
     tp.set_defaults(fn=cmd_etl)
     return p
 

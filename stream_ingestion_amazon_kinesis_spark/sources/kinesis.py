@@ -10,7 +10,7 @@ This builder translates the reference's operating parameters to
 connector options. The connector jar (spark-sql-kinesis /
 spark-streaming-kinesis-asl) is not in this environment, so `load()`
 will fail here — the downstream plan is identical either way, which is
-the point: tests drive the same pipeline from the file source
+the point: tests drive the same pipeline from the kinesis_sim source
 (streaming/pipeline.py), and production swaps this reader in.
 """
 
@@ -60,6 +60,6 @@ def read_kinesis_stream(
     except Exception as e:  # connector jar absent in this environment
         raise RuntimeError(
             "Kinesis connector not on the classpath; add a spark-sql-kinesis "
-            "connector jar, or use streaming.pipeline.read_session_stream "
-            "(file source) which drives the identical downstream plan"
+            "connector jar, or use streaming.pipeline.read_session_stream_kinesis_sim "
+            "(the kinesis_sim source), which drives the identical downstream plan"
         ) from e

@@ -32,13 +32,15 @@ instead of a driver-side loop:
 
 On-disk stream layout (a "stream" is a directory):
 
-    <stream>/shard-00000/part-<taskid>.jsonl
+    <stream>/shard-00000/part-<8-digit index>-<suffix>.jsonl
     <stream>/shard-00001/part-...
+    <stream>/_epochs/w-<token>     done-marker of an idempotent publish
 
 Each line is one record envelope: ``{"partitionKey": str, "data": str}``.
-A record's sequence number is its 0-based position within the shard
-(part files ordered by name), mirroring Kinesis' monotone per-shard
-sequence numbers.
+`publish` gives each part file the next index of its shard, so files
+sort in append order. A record's sequence number is its 0-based
+position within the shard (part files ordered by name), mirroring
+Kinesis' monotone per-shard sequence numbers.
 
 Reader and writer methods need only the stdlib and pyarrow (which
 PySpark's data source workers import anyway).
@@ -85,9 +87,8 @@ def _shard_dirs(path: str) -> list[str]:
     )
 
 
-# Committed part files carry a zero-padded per-shard index so appends
-# always sort after existing files; anything else is a legacy name that
-# commit() migrates before appending (see KinesisSimWriter.commit).
+# Published part files carry a zero-padded per-shard index so appends
+# always sort after existing files; `publish` refuses any other name.
 _INDEXED_RE = re.compile(r"^part-\d{8}-")
 
 
@@ -239,6 +240,52 @@ class KinesisSimStreamReader(SimpleDataSourceStreamReader):
         return iter(batches), out
 
 
+class StaleCheckpointError(RuntimeError):
+    """A checkpoint's source stream was regenerated since it was written."""
+
+
+def guard_checkpoint(stream_dir: str, checkpoint_dir: str) -> None:
+    """Refuse a checkpoint whose source stream was regenerated at the
+    same path. Published part files are never rewritten and appends only
+    add files after them, so each shard's first part file (name, size,
+    mtime_ns) fingerprints the shard. The first call over a checkpoint
+    records the fingerprints in `<checkpoint>/_source_shards.json`; a
+    later call raises if a recorded shard's first file changed or
+    vanished, then records the shards that appeared since. This catches
+    a stream regenerated to at least its old length, which the reader's
+    offset-past-tail check misses. Costs one listdir and one stat per
+    shard, at query start only."""
+    path = os.path.join(checkpoint_dir, "_source_shards.json")
+    current = {}
+    for d in _shard_dirs(stream_dir):
+        files = _shard_files(d)
+        if files:
+            st = os.stat(files[0])
+            current[os.path.basename(d)] = [
+                os.path.basename(files[0]), st.st_size, st.st_mtime_ns
+            ]
+    try:
+        with open(path, encoding="utf-8") as fh:
+            seen = json.load(fh)
+    except FileNotFoundError:
+        seen = {}
+    changed = sorted(sid for sid, sig in seen.items() if current.get(sid) != sig)
+    if changed:
+        raise StaleCheckpointError(
+            f"stale checkpoint {checkpoint_dir}: source stream {stream_dir} "
+            f"was regenerated since the checkpoint was written (first part "
+            f"file of {', '.join(changed)} changed or vanished). Reprocessing "
+            "with this checkpoint would silently skip records. Use a fresh "
+            "checkpoint (and clean destination streams), or delete this one "
+            "to reprocess from scratch."
+        )
+    if current.keys() - seen.keys():
+        os.makedirs(checkpoint_dir, exist_ok=True)
+        with open(path + ".tmp", "w", encoding="utf-8") as fh:
+            json.dump(current, fh, sort_keys=True)
+        os.replace(path + ".tmp", path)
+
+
 def _consume_killpoint(stream_dir: str, name: str) -> None:
     """kill -9 chaos-drill hook: a file named `name` in the stream dir
     makes the calling code deliver SIGKILL to the etl driver (pid from
@@ -347,39 +394,29 @@ def publish(stream_dir: str, staged: list, token: str | None) -> None:
     # Sequence numbers are defined by FILE-NAME order within a shard
     # (_iter_shard_lines), so appended files MUST sort after every
     # existing file or a later append would renumber records a
-    # checkpointed reader already consumed (caught as a real
-    # duplicate+skip in the round-4 etl incremental-resume test: a
-    # lower-sorting uuid part file shifted the committed offsets).
-    # Each new file therefore gets a zero-padded per-shard index =
-    # count of existing files + arrival order; the task-id suffix
-    # keeps concurrent committers collision-free, and zero-padded
-    # indices always sort after lower ones regardless of suffix.
-    # Legacy migration: streams written BEFORE the zero-padded-index
-    # fix hold uuid-named parts (part-<taskid>.jsonl) that new
-    # indexed names can sort BEFORE (e.g. part-00000002-x <
-    # part-3fa9...), renumbering offsets a checkpointed reader has
-    # already consumed — the same duplicate/skip bug the index fix
-    # closed, alive on legacy data. Before appending, rename every
-    # existing file to its canonical index in the CURRENT sorted
-    # order (the order consumers have been reading), which preserves
-    # all record positions and guarantees appends sort after.
+    # checkpointed reader already consumed. Each new file therefore gets
+    # a zero-padded per-shard index = count of existing files + arrival
+    # order; the suffix keeps concurrent committers collision-free. Any
+    # other name could sort after a new index, so a shard holding one
+    # is refused before a single file moves.
     next_idx: dict[str, int] = {}
+    for rel, _tmp in staged:
+        shard_dir = os.path.join(stream_dir, os.path.dirname(rel))
+        if shard_dir not in next_idx:
+            os.makedirs(shard_dir, exist_ok=True)
+            existing = [os.path.basename(f) for f in _shard_files(shard_dir)]
+            odd = [f for f in existing if not _INDEXED_RE.match(f)]
+            if odd:
+                raise ValueError(
+                    f"kinesis_sim: {os.path.join(shard_dir, odd[0])} is not a "
+                    "part-<8-digit index>-... file, so an append could sort "
+                    "before it and renumber records; refusing to publish"
+                )
+            next_idx[shard_dir] = len(existing)
     for rel, tmp in staged:
-        shard_rel = os.path.dirname(rel)
-        shard_dir = os.path.join(stream_dir, shard_rel)
-        os.makedirs(shard_dir, exist_ok=True)
-        if shard_rel not in next_idx:
-            existing = _shard_files(shard_dir)
-            if any(not _INDEXED_RE.match(os.path.basename(f)) for f in existing):
-                for i, f in enumerate(existing):
-                    tail = os.path.basename(f)[len("part-"):]
-                    canon = os.path.join(shard_dir, f"part-{i:08d}-{tail}")
-                    if f != canon:
-                        os.replace(f, canon)
-                existing = _shard_files(shard_dir)
-            next_idx[shard_rel] = len(existing)
-        idx = next_idx[shard_rel]
-        next_idx[shard_rel] = idx + 1
+        shard_dir = os.path.join(stream_dir, os.path.dirname(rel))
+        idx = next_idx[shard_dir]
+        next_idx[shard_dir] = idx + 1
         suffix = os.path.basename(rel)[len("part-"):]
         if token:
             suffix = f"{token}-{suffix}"

@@ -7,10 +7,11 @@ restart (consumer.py:53-94, 108-195 — at-least-once with full
 TRIM_HORIZON replay). This module is the same pipeline as ONE logical
 plan, incrementalized by the micro-batch engine:
 
-- source: `readStream` over a directory of JSON records (the test/
-  local stand-in; a Kinesis/Kafka source is a `format()` swap — the
-  plan and sinks are untouched, per BASELINE.json's "Structured
-  Streaming + Kinesis source" approach).
+- source: `readStream.format("kinesis_sim")` over a sharded stream
+  directory (`sources/kinesis_sim.py`, the local stand-in; a real
+  Kinesis/Kafka source is a `format()` swap — the plan and sinks are
+  untouched, per BASELINE.json's "Structured Streaming + Kinesis
+  source" approach).
 - transform: the exact T1-T6 enrichment from operators/enrichment.py —
   same code object as the batch path, which is what makes streaming
   results oracle-checkable by batch replay.
@@ -23,14 +24,12 @@ plan, incrementalized by the micro-batch engine:
   exactly-once output, replacing the reference's restart-equals-replay
   behavior (consumer.py:76).
 
-Shard -> partition mapping: each source file of the JSON stream becomes
-input partitions processed by parallel tasks; a live kinesis_sim
-micro-batch is ONE partition, every shard's capped slice read on the
-driver and shipped to the JVM with the batch (no Python worker runs);
-`trigger(processingTime=...)`
-replaces the `time.sleep(2)` pacing (consumer.py:194-195); per-key
-output ordering (partition key session_id, consumer.py:170) is
-preserved by staging the collected rows in order.
+Shard -> partition mapping: a live micro-batch is ONE partition, every
+shard's capped slice read on the driver and shipped to the JVM with the
+batch (no Python worker runs); `trigger(processingTime=...)` replaces
+the `time.sleep(2)` pacing (consumer.py:194-195); per-key output
+ordering (partition key session_id, consumer.py:170) is preserved by
+staging the collected rows in order.
 """
 
 from __future__ import annotations
@@ -46,24 +45,6 @@ from pyspark.sql import types as T
 
 from ..operators.enrichment import ROUTES, enrich_sessions, route_column
 from ..sources.json_source import CORRUPT_COL, PERMISSIVE, SESSION_RECORD_SCHEMA
-
-
-def read_session_stream(
-    spark: SparkSession,
-    input_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming source of JSON session records.
-
-    File source here; swapping `.format("kinesis")` / `.format("kafka")`
-    with the matching options yields the same downstream plan. The
-    `maxFilesPerTrigger` option is the file-source analog of the
-    reference's `Limit=200` fetch cap (consumer.py:114-116).
-    """
-    reader = spark.readStream.schema(SESSION_RECORD_SCHEMA).options(**PERMISSIVE)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(input_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -302,8 +283,8 @@ def read_session_stream_kinesis_sim(
     """Session records from a kinesis_sim SOURCE stream: the custom
     DataSource yields (shard_id, sequence_number, partition_key, data);
     the JSON payload is parsed PERMISSIVE into the session schema with
-    the corrupt column, so downstream sinks see the exact same shape as
-    the file-source path (S3 JSON decode, consumer.py:118)."""
+    the corrupt column that `kinesis_sim_sink` quarantines on (S3 JSON
+    decode, consumer.py:118)."""
     from ..sources.kinesis_sim import register_format
 
     register_format(spark)
@@ -321,23 +302,25 @@ def run_kinesis_sim_pipeline(
     dest_streams: dict[str, str],
     checkpoint_dir: str,
     await_all_available: bool = False,
-    source_format: str = "json",
+    source_format: str = "kinesis_sim",
 ):
-    """The reference's full topology — source stream -> per-record
-    enrichment -> keyed demux to two destination streams — with the
-    destination side going through the kinesis_sim custom sink.
-    `source_format="kinesis_sim"` reads the source from a kinesis_sim
-    stream directory instead of a JSON file stream (the CLI pairing
-    with `produce`)."""
-    if source_format not in ("json", "kinesis_sim"):
+    """The reference's full topology — kinesis_sim source stream
+    `input_dir` -> per-record enrichment -> keyed demux to two
+    destination streams through `kinesis_sim_sink` — checkpointed in
+    `checkpoint_dir`. `source_format` accepts only "kinesis_sim".
+
+    Before the query starts, `kinesis_sim.guard_checkpoint` refuses
+    (`StaleCheckpointError`) a checkpoint whose source stream was
+    regenerated since it was written, which the reader's offset-past-
+    tail check misses when the new stream is at least as long."""
+    from ..sources.kinesis_sim import guard_checkpoint
+
+    if source_format != "kinesis_sim":
         raise ValueError(
-            f"source_format must be 'json' or 'kinesis_sim', "
-            f"got {source_format!r}"
+            f"source_format must be 'kinesis_sim', got {source_format!r}"
         )
-    if source_format == "kinesis_sim":
-        stream = read_session_stream_kinesis_sim(spark, input_dir)
-    else:
-        stream = read_session_stream(spark, input_dir)
+    guard_checkpoint(input_dir, checkpoint_dir)
+    stream = read_session_stream_kinesis_sim(spark, input_dir)
     # Commit-token scope = the checkpoint path: one checkpoint == one
     # monotone epoch-id space, so markers from a different (e.g. fresh)
     # checkpoint can never suppress this run's writes.

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -21,3 +22,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def write_source_stream(stream: str, shards: dict[int, list[list]]) -> None:
+    """A kinesis_sim stream written directly in its on-disk layout: for
+    each shard, one part file per list of records. A record is a session
+    dict, or a str put on the wire as is (a malformed payload)."""
+    for shard, files in shards.items():
+        d = os.path.join(stream, f"shard-{shard:05d}")
+        os.makedirs(d)
+        for i, recs in enumerate(files):
+            with open(os.path.join(d, f"part-{i:08d}-src.jsonl"), "w", encoding="utf-8") as fh:
+                for rec in recs:
+                    if isinstance(rec, str):
+                        env = {"partitionKey": "malformed", "data": rec}
+                    else:
+                        env = {"partitionKey": rec["session_id"], "data": json.dumps(rec)}
+                    fh.write(json.dumps(env) + "\n")

@@ -8,6 +8,7 @@ import os
 
 import pytest
 
+from conftest import write_source_stream
 from stream_ingestion_amazon_kinesis_spark.__main__ import main
 
 RECORD = {
@@ -61,8 +62,6 @@ def test_cli_produce_consume_etl_roundtrip(spark, tmp_path, capsys):
                 json.dumps({"USA": usa, "International": intl}),
                 "--checkpoint",
                 str(tmp_path / "ckpt"),
-                "--source-format",
-                "kinesis_sim",
             ]
         )
         == 0
@@ -117,8 +116,6 @@ def test_cli_etl_default_checkpoint_is_stable(tmp_path, spark, capsys):
         stream,
         "--dest-streams",
         json.dumps({"USA": usa, "International": intl}),
-        "--source-format",
-        "kinesis_sim",
     ]
     assert main(etl_args) == 0
     out1 = capsys.readouterr().out
@@ -130,7 +127,7 @@ def test_cli_etl_default_checkpoint_is_stable(tmp_path, spark, capsys):
 
 def test_pipeline_rejects_unknown_source_format(spark, tmp_path):
     """ADVICE r3: a library caller passing a typo'd source_format gets
-    ValueError, not a silent JSON-source fallback."""
+    ValueError, not a silent fallback to another source."""
     from stream_ingestion_amazon_kinesis_spark.streaming.pipeline import (
         run_kinesis_sim_pipeline,
     )
@@ -158,8 +155,6 @@ def test_cli_etl_incremental_resume(tmp_path, spark, capsys):
         stream,
         "--dest-streams",
         json.dumps({"USA": usa, "International": intl}),
-        "--source-format",
-        "kinesis_sim",
     ]
     assert (
         main(["produce", "--stream", stream, "--json-string", json.dumps(RECORD)])
@@ -192,8 +187,6 @@ def test_cli_etl_stale_checkpoint_refuses(tmp_path, spark, capsys):
         stream,
         "--dest-streams",
         json.dumps({"USA": usa, "International": intl}),
-        "--source-format",
-        "kinesis_sim",
     ]
     assert (
         main(["produce", "--stream", stream, "--json-string", json.dumps(RECORD)])
@@ -238,8 +231,6 @@ def test_cli_etl_appends_still_resume_with_manifest(tmp_path, spark, capsys):
         stream,
         "--dest-streams",
         json.dumps({"USA": usa, "International": intl}),
-        "--source-format",
-        "kinesis_sim",
         "--checkpoint",
         str(tmp_path / "ckpt"),
     ]
@@ -260,11 +251,11 @@ def test_cli_etl_appends_still_resume_with_manifest(tmp_path, spark, capsys):
 
 
 def test_cli_etl_crash_before_commit_exactly_once(tmp_path, spark, capsys):
-    """VERDICT r5 ask #3: inject a crash AFTER task files land in
-    staging but BEFORE KinesisSimWriter.commit publishes anything, then
-    restart — the retried epoch must deliver every record exactly once
-    (abort cleans staging; nothing was published, so the retry
-    republishes all)."""
+    """VERDICT r5 ask #3: inject a crash AFTER the routed sink staged
+    the micro-batch but BEFORE `kinesis_sim.publish` publishes anything
+    (its `_failpoint_before_commit`), then restart — the retried epoch
+    must deliver every record exactly once (nothing was published, so
+    the retry republishes all)."""
     stream = str(tmp_path / "stream")
     usa = str(tmp_path / "usa")
     intl = str(tmp_path / "intl")
@@ -274,8 +265,6 @@ def test_cli_etl_crash_before_commit_exactly_once(tmp_path, spark, capsys):
         stream,
         "--dest-streams",
         json.dumps({"USA": usa, "International": intl}),
-        "--source-format",
-        "kinesis_sim",
         "--checkpoint",
         str(tmp_path / "ckpt"),
     ]
@@ -359,20 +348,7 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
         # Source stream written directly in the kinesis_sim layout (no
         # Spark needed): 2 shards x 3 records, the malformed payload last
         # in shard 1.
-        for shard in (0, 1):
-            d = os.path.join(stream, f"shard-{shard:05d}")
-            os.makedirs(d)
-            envs = [
-                {"partitionKey": rec["session_id"], "data": json.dumps(rec)}
-                for rec in records[shard * 3 : shard * 3 + 3]
-            ]
-            if shard == 1:
-                envs.append({"partitionKey": "s-kbad", "data": malformed})
-            with open(
-                os.path.join(d, f"part-{0:08d}-src.jsonl"), "w", encoding="utf-8"
-            ) as fh:
-                for env_rec in envs:
-                    fh.write(json.dumps(env_rec) + "\n")
+        write_source_stream(stream, {0: [records[:3]], 1: [records[3:] + [malformed]]})
         os.makedirs(usa)
         os.makedirs(intl)
         armed_dir = usa if route == "USA" else intl
@@ -389,8 +365,6 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
             json.dumps({"USA": usa, "International": intl}),
             "--checkpoint",
             ckpt,
-            "--source-format",
-            "kinesis_sim",
         ]
         return args, usa, intl, armed_dir
 
@@ -482,8 +456,6 @@ def test_cli_etl_partial_epoch_retry_skips_committed_route(tmp_path, spark, caps
         stream,
         "--dest-streams",
         json.dumps({"USA": usa, "International": intl}),
-        "--source-format",
-        "kinesis_sim",
         "--checkpoint",
         str(tmp_path / "ckpt"),
     ]

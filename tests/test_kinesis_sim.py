@@ -15,6 +15,7 @@ import zlib
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import write_source_stream
 from stream_ingestion_amazon_kinesis_spark.sources import kinesis_sim
 
 
@@ -189,9 +190,9 @@ def test_stream_restart_resumes_from_checkpoint_exactly_once(spark, stream_dir, 
 
 
 def test_dest_stream_pipeline_routes_sessions(spark, tmp_path, sf_dir):
-    """Reference topology end-to-end: JSON session stream -> enrichment
-    -> USA/International demux, destination side through the kinesis_sim
-    custom sink (consumer.py:160-171)."""
+    """Reference topology end-to-end: kinesis_sim session stream ->
+    enrichment -> USA/International demux, destination side through the
+    kinesis_sim custom sink (consumer.py:160-171)."""
     import json
 
     from pyspark.sql import functions as F
@@ -211,10 +212,7 @@ def test_dest_stream_pipeline_routes_sessions(spark, tmp_path, sf_dir):
         for i in range(30)
     ]
     src = tmp_path / "sessions_in"
-    src.mkdir()
-    with open(src / "batch.json", "w") as fh:
-        for rec in sessions:
-            fh.write(json.dumps(rec) + "\n")
+    write_source_stream(str(src), {0: [sessions]})
 
     dest = {
         "USA": str(tmp_path / "stream_usa"),
@@ -293,13 +291,12 @@ def test_append_preserves_sequence_numbers(spark, tmp_path):
     ]
 
 
-def test_append_to_legacy_uuid_stream_migrates_and_preserves_order(spark, tmp_path):
-    """VERDICT r5 (low): a stream written BEFORE the zero-padded-index
-    fix holds uuid-named part files that new indexed names can sort
-    before, renumbering offsets a checkpointed reader already consumed.
-    commit() must migrate legacy names to canonical indices (preserving
-    the current record order) before appending, so the append lands
-    strictly after."""
+def test_append_to_legacy_uuid_stream_is_refused(spark, tmp_path):
+    """A stream holding uuid-named part files (part-<taskid>.jsonl, the
+    naming before the zero-padded per-shard index) cannot take an
+    append: a new indexed name can sort before a uuid name and renumber
+    records a checkpointed reader already consumed. The publish refuses,
+    naming the file, and leaves every file as it was."""
     kinesis_sim.register_format(spark)
     stream = str(tmp_path / "legacy")
     shard = os.path.join(stream, "shard-00000")
@@ -311,22 +308,26 @@ def test_append_to_legacy_uuid_stream_migrates_and_preserves_order(spark, tmp_pa
     with open(os.path.join(shard, "part-ffff33334444.jsonl"), "w") as fh:
         fh.write('{"partitionKey": "k", "data": "legacy-1"}\n')
 
+    def snapshot():
+        out = {}
+        for name in sorted(os.listdir(shard)):
+            with open(os.path.join(shard, name), encoding="utf-8") as fh:
+                out[name] = fh.read()
+        return out
+
+    before = snapshot()
     df = spark.createDataFrame(
         [("k", "appended-2")], "partition_key string, data string"
     )
-    (
-        df.write.format("kinesis_sim")
-        .option("path", stream)
-        .option("numShards", "1")
-        .mode("append")
-        .save()
-    )
-
-    # Every file now carries a canonical zero-padded index.
-    names = sorted(os.listdir(shard))
-    assert all(kinesis_sim._INDEXED_RE.match(n) for n in names), names
-    # Record order (== checkpointed offset space) is unchanged; the
-    # append sorts after both legacy records.
+    with pytest.raises(Exception, match="part-aaaa11112222.jsonl"):
+        (
+            df.write.format("kinesis_sim")
+            .option("path", stream)
+            .option("numShards", "1")
+            .mode("append")
+            .save()
+        )
+    assert snapshot() == before
     rows = (
         spark.read.format("kinesis_sim")
         .option("path", stream)
@@ -337,7 +338,6 @@ def test_append_to_legacy_uuid_stream_migrates_and_preserves_order(spark, tmp_pa
     assert [(r["sequence_number"], r["data"]) for r in rows] == [
         (0, "legacy-0"),
         (1, "legacy-1"),
-        (2, "appended-2"),
     ]
 
 
@@ -465,25 +465,6 @@ def test_commit_token_makes_appends_idempotent(tmp_path):
     assert len(records()) == 20
 
 
-def _write_source_stream(stream: str, shards: dict[int, list[list]]) -> None:
-    """A kinesis_sim stream written directly in its on-disk layout: for
-    each shard, one part file per list of records. A record is a session
-    dict, or a str put on the wire as is (a malformed payload)."""
-    import json
-
-    for shard, files in shards.items():
-        d = os.path.join(stream, f"shard-{shard:05d}")
-        os.makedirs(d)
-        for i, recs in enumerate(files):
-            with open(os.path.join(d, f"part-{i:08d}-src.jsonl"), "w", encoding="utf-8") as fh:
-                for rec in recs:
-                    if isinstance(rec, str):
-                        env = {"partitionKey": "malformed", "data": rec}
-                    else:
-                        env = {"partitionKey": rec["session_id"], "data": json.dumps(rec)}
-                    fh.write(json.dumps(env) + "\n")
-
-
 def test_slice_reads_match_full_read_filtered(tmp_path):
     """A slice [start, end) read across part-file boundaries (and past a
     blank line, which holds no sequence number) returns exactly the rows
@@ -492,7 +473,7 @@ def test_slice_reads_match_full_read_filtered(tmp_path):
     batch reader's full shard scan."""
     stream = str(tmp_path / "stream")
     files = [[{"session_id": f"s{f}-{i}"} for i in range(n)] for f, n in enumerate((3, 1, 4))]
-    _write_source_stream(stream, {0: files})
+    write_source_stream(stream, {0: files})
     shard = kinesis_sim._shard_dirs(stream)[0]
     with open(os.path.join(shard, "part-00000001-src.jsonl"), "a", encoding="utf-8") as fh:
         fh.write("\n")
@@ -512,6 +493,36 @@ def test_slice_reads_match_full_read_filtered(tmp_path):
         assert offset == {"shard-00000": end}
         replay = reader.readBetweenOffsets({"shard-00000": start}, {"shard-00000": end})
         assert rows(replay) == want, (start, end)
+
+
+def test_guard_checkpoint_fingerprints_first_part_files(tmp_path):
+    """`guard_checkpoint` records each shard's first part file (name,
+    size, mtime_ns) in the checkpoint: appends and new shards pass (and
+    new shards get recorded), while a first file rewritten in place with
+    the same name and size, or a vanished shard, is refused."""
+    import json
+    import shutil
+
+    stream, ckpt = str(tmp_path / "stream"), str(tmp_path / "ckpt")
+    write_source_stream(stream, {0: [[{"session_id": "a"}]]})
+    kinesis_sim.guard_checkpoint(stream, ckpt)
+    write_source_stream(stream, {1: [[{"session_id": "b"}]]})
+    with open(os.path.join(stream, "shard-00000", "part-00000001-x.jsonl"), "w") as fh:
+        fh.write('{"partitionKey": "a", "data": "{}"}\n')
+    kinesis_sim.guard_checkpoint(stream, ckpt)
+    with open(os.path.join(ckpt, "_source_shards.json")) as fh:
+        assert sorted(json.load(fh)) == ["shard-00000", "shard-00001"]
+
+    first = os.path.join(stream, "shard-00001", "part-00000000-src.jsonl")
+    st = os.stat(first)
+    os.utime(first, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    with pytest.raises(kinesis_sim.StaleCheckpointError, match="stale checkpoint.*shard-00001"):
+        kinesis_sim.guard_checkpoint(stream, ckpt)
+    os.utime(first, ns=(st.st_atime_ns, st.st_mtime_ns))
+    kinesis_sim.guard_checkpoint(stream, ckpt)
+    shutil.rmtree(os.path.join(stream, "shard-00000"))
+    with pytest.raises(RuntimeError, match="stale checkpoint.*shard-00000"):
+        kinesis_sim.guard_checkpoint(stream, ckpt)
 
 
 def test_routed_sink_rejects_streams_on_two_filesystems(tmp_path, monkeypatch):
@@ -545,7 +556,7 @@ def _run_routed_pipeline(spark, tmp_path, shards, monkeypatch):
     from stream_ingestion_amazon_kinesis_spark.streaming import pipeline
 
     stream = str(tmp_path / "stream")
-    _write_source_stream(stream, shards)
+    write_source_stream(stream, shards)
     dest = {"USA": str(tmp_path / "usa"), "International": str(tmp_path / "intl")}
     groups = []
     build = pipeline.kinesis_sim_sink
@@ -566,9 +577,7 @@ def _run_routed_pipeline(spark, tmp_path, shards, monkeypatch):
         return write_batch
 
     monkeypatch.setattr(pipeline, "kinesis_sim_sink", traced_sink)
-    q = pipeline.run_kinesis_sim_pipeline(
-        spark, stream, dest, str(tmp_path / "ckpt"), source_format="kinesis_sim"
-    )
+    q = pipeline.run_kinesis_sim_pipeline(spark, stream, dest, str(tmp_path / "ckpt"))
     try:
         q.processAllAvailable()
         staging = [d for d in dest.values() if os.path.exists(os.path.join(d, "_staging"))]

@@ -1,5 +1,5 @@
 """Streaming semantics, validated by batch replay (SURVEY §7 M3):
-the same files processed by the streaming plan and the batch plan must
+the same input processed by the streaming plan and the batch plan must
 agree — which is what makes the streaming path oracle-checkable."""
 
 from __future__ import annotations
@@ -8,9 +8,9 @@ import json
 import os
 
 import pytest
-
 from pyspark.sql import functions as F
 
+from conftest import write_source_stream
 from stream_ingestion_amazon_kinesis_spark.operators.enrichment import enrich_sessions
 from stream_ingestion_amazon_kinesis_spark.sources import kinesis_sim
 from stream_ingestion_amazon_kinesis_spark.sources.catalog import load_table
@@ -42,21 +42,23 @@ SESSIONS = [
 ]
 
 
+BAD_PAYLOAD = "{definitely not json"
+
+
+def _write_sessions(stream: str, sessions: list[dict]) -> None:
+    """Two shards, the malformed payload last in shard 1."""
+    write_source_stream(stream, {0: [sessions[0::2]], 1: [sessions[1::2] + [BAD_PAYLOAD]]})
+
+
 @pytest.fixture()
 def session_dir(tmp_path):
-    d = tmp_path / "in"
-    d.mkdir()
-    # two "shards" (files) — the source parallelism unit
-    for shard in range(2):
-        with open(d / f"shard{shard}.json", "w") as f:
-            for rec in SESSIONS[shard::2]:
-                f.write(json.dumps(rec) + "\n")
-    (d / "bad.json").write_text("{definitely not json\n")
-    return str(d)
+    d = str(tmp_path / "in")
+    _write_sessions(d, SESSIONS)
+    return d
 
 
 def _run_pipeline(spark, tmp_path, session_dir) -> dict[str, list[str]]:
-    """Run the reference topology over the JSON session files to
+    """Run the reference topology over the kinesis_sim session stream to
     completion; return the `data` payloads of the USA, International and
     quarantine streams."""
     usa = str(tmp_path / "usa")
@@ -65,8 +67,14 @@ def _run_pipeline(spark, tmp_path, session_dir) -> dict[str, list[str]]:
         spark, session_dir, dest, str(tmp_path / "ckpt"), await_all_available=True
     )
     q.stop()
+    return _read_routes(spark, tmp_path)
+
+
+def _read_routes(spark, tmp_path) -> dict[str, list[str]]:
+    usa = str(tmp_path / "usa")
     kinesis_sim.register_format(spark)
-    paths = dict(dest, quarantine=os.path.join(usa, "_quarantine"))
+    paths = {"USA": usa, "International": str(tmp_path / "intl"),
+             "quarantine": os.path.join(usa, "_quarantine")}
     return {
         route: [
             r.data
@@ -82,9 +90,9 @@ def test_enrichment_pipeline_end_to_end(spark, tmp_path, session_dir):
     intl = [json.loads(d) for d in out["International"]]
     errors = out["quarantine"]
 
-    # batch replay of the identical logic over the identical files
-    raw = spark.read.text(session_dir).withColumnRenamed("value", "value")
-    ok, quarantine = parse_json_records(raw)
+    # batch replay of the identical logic over the identical stream
+    raw = spark.read.format("kinesis_sim").option("path", session_dir).load()
+    ok, quarantine = parse_json_records(raw, value_col="data")
     expected = enrich_sessions(ok, with_processing_ts=False)
     exp_usa = expected.filter(F.col("country") == "USA")
     exp_intl = expected.filter(F.col("country") != "USA")
@@ -92,7 +100,7 @@ def test_enrichment_pipeline_end_to_end(spark, tmp_path, session_dir):
     assert len(usa) == exp_usa.count()
     assert len(intl) == exp_intl.count()
     assert len(errors) == quarantine.count() == 1
-    assert errors == ["{definitely not json"]
+    assert errors == [BAD_PAYLOAD]
 
     # spot-check enrichment values match the batch plan per session
     got = {
@@ -112,6 +120,21 @@ def test_enrichment_pipeline_exactly_once_on_restart(spark, tmp_path, session_di
     # reference's TRIM_HORIZON full replay, consumer.py:76)
     n2 = {k: len(v) for k, v in _run_pipeline(spark, tmp_path, session_dir).items()}
     assert n1 == n2
+
+
+def test_pipeline_refuses_checkpoint_of_regenerated_stream(spark, tmp_path, session_dir):
+    """A source stream regenerated at the same path with as many records
+    per shard passes the reader's offset-past-tail check, so resuming
+    its old checkpoint would skip every new record. The pipeline refuses
+    it before the query starts, and nothing is published."""
+    import shutil
+
+    first = _run_pipeline(spark, tmp_path, session_dir)
+    shutil.rmtree(session_dir)
+    _write_sessions(session_dir, [dict(s, session_id=f"regen-{s['session_id']}") for s in SESSIONS])
+    with pytest.raises(RuntimeError, match="stale checkpoint"):
+        _run_pipeline(spark, tmp_path, session_dir)
+    assert _read_routes(spark, tmp_path) == first
 
 
 def _events_json_dir(spark, sf_dir, tmp_path, with_dupes=False):
