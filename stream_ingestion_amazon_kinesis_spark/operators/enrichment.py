@@ -35,25 +35,31 @@ def _qty(x: Column) -> Column:
     return x["quantity"].cast("long")
 
 
+def enrichment_columns(with_processing_ts: bool = True) -> dict[str, Column]:
+    """T2-T5 (and T1 unless `with_processing_ts` is False) as named
+    Columns over a `browse_history` array column, in output order. The
+    Columns are unresolved expressions, so one dict can serve many
+    queries: `current_timestamp()` is fixed per query, not per build."""
+    bh = F.col("browse_history")
+    cols = {
+        "overall_product_quantity": F.aggregate(
+            bh, F.lit(0).cast("long"), lambda acc, x: acc + _qty(x)
+        ),
+        "overall_in_shopping_cart": F.aggregate(
+            F.filter(bh, lambda x: x["in_shopping_cart"]),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + _qty(x),
+        ),
+        "total_different_products": F.size(bh).cast("long"),
+    }
+    if with_processing_ts:
+        cols["processing_timestamp"] = F.current_timestamp()
+    return cols
+
+
 def enrich_sessions(sessions: DataFrame, with_processing_ts: bool = True) -> DataFrame:
     """T1-T5 over a DataFrame bearing a `browse_history` array column."""
-    bh = F.col("browse_history")
-    out = sessions.withColumns(
-        {
-            "overall_product_quantity": F.aggregate(
-                bh, F.lit(0).cast("long"), lambda acc, x: acc + _qty(x)
-            ),
-            "overall_in_shopping_cart": F.aggregate(
-                F.filter(bh, lambda x: x["in_shopping_cart"]),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + _qty(x),
-            ),
-            "total_different_products": F.size(bh).cast("long"),
-        }
-    )
-    if with_processing_ts:
-        out = out.withColumn("processing_timestamp", F.current_timestamp())
-    return out
+    return sessions.withColumns(enrichment_columns(with_processing_ts))
 
 
 ROUTES = ("USA", "International")

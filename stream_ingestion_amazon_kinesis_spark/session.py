@@ -40,6 +40,21 @@ def get_spark(app_name: str = "stream_ingestion_amazon_kinesis_spark") -> SparkS
         # Arrow transfer for pandas_udf / toPandas.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # Streaming offset and commit logs through the FileSystem API
+        # instead of FileContext, which makes Hadoop's local filesystem
+        # spawn chmod/readlink processes per log file when native
+        # libhadoop is absent (~3x the walCommit/commitOffsets cost).
+        # This manager writes a temp file and then renames it: rename is
+        # atomic on local disk and on HDFS, NOT on object stores, so an
+        # S3-style checkpoint needs a different manager. `file:` still
+        # resolves to the checksummed LocalFileSystem, so the `.crc`
+        # sidecars that catch a corrupted offset file stay;
+        # RawLocalFileSystem (`fs.file.impl`) is deliberately not set.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # The events fixture carries parquet TIMESTAMP(NANOS), which Spark
         # has no native type for; read it as nanos-since-epoch longs and
         # convert at the catalog layer (sources/catalog.py).

@@ -175,7 +175,11 @@ class KinesisSimBatchReader(DataSourceReader):
     def partitions(self):
         return [ShardPartition(d) for d in _shard_dirs(self.path)]
 
-    def read(self, partition: ShardPartition):
+    def read(self, partition: ShardPartition | None):
+        # A stream with no shard plans no partition, and PySpark then
+        # calls read(None) once: an empty stream reads as 0 rows.
+        if partition is None:
+            return iter(())
         lines, _ = _shard_slice(partition.shard_dir, 0, None)
         return iter(_parse_slice(os.path.basename(partition.shard_dir), 0, lines))
 
@@ -396,9 +400,11 @@ def publish(stream_dir: str, staged: list, token: str | None) -> None:
     # existing file or a later append would renumber records a
     # checkpointed reader already consumed. Each new file therefore gets
     # a zero-padded per-shard index = count of existing files + arrival
-    # order; the suffix keeps concurrent committers collision-free. Any
-    # other name could sort after a new index, so a shard holding one
-    # is refused before a single file moves.
+    # order. This assumes ONE writer per stream: two concurrent
+    # publishers can both count the same files and take the same index
+    # (ROADMAP item 2 reproduced both taking index 1), and the suffix
+    # does not order them. Any other name could sort after a new index,
+    # so a shard holding one is refused before a single file moves.
     next_idx: dict[str, int] = {}
     for rel, _tmp in staged:
         shard_dir = os.path.join(stream_dir, os.path.dirname(rel))

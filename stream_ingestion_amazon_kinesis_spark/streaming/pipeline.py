@@ -19,7 +19,10 @@ plan, incrementalized by the micro-batch engine:
   reference re-serializes record-at-a-time, consumer.py:160-171, and
   drops malformed records with a log line, consumer.py:177-185). One
   Spark job collects the whole routed micro-batch; the driver then
-  stages and publishes each route with the batch's commit token.
+  stages and publishes each route with the batch's commit token. The
+  routed projection (enrichment, route, shard, envelope) is built once
+  per query and re-selected on every micro-batch, so a batch pays no
+  Python-side plan building.
 - state: checkpointed offsets plus the epoch-idempotent publish give
   exactly-once output, replacing the reference's restart-equals-replay
   behavior (consumer.py:76).
@@ -43,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.enrichment import ROUTES, enrich_sessions, route_column
+from ..operators.enrichment import ROUTES, enrichment_columns, route_column
 from ..sources.json_source import CORRUPT_COL, PERMISSIVE, SESSION_RECORD_SCHEMA
 
 
@@ -188,6 +191,12 @@ def kinesis_sim_sink(
     directory; the directories are created here and must sit on one
     filesystem, since publishing moves the staged files with os.replace.
 
+    The (route, shard, envelope) Columns are built once per query, on
+    its first batch, from `enrichment_columns` (keyed on the batch's
+    column names); each batch runs `batch.select(*cols).collect()`. The
+    Columns stay unresolved, so every batch's query stamps its own
+    `processing_timestamp` (T1).
+
     The driver holds one micro-batch's envelopes; the kinesis_sim source
     caps a micro-batch at `maxFetchRecordsPerShard` records per shard.
     Staging on the driver keeps the write free of Python worker tasks
@@ -219,6 +228,27 @@ def kinesis_sim_sink(
     # published. No-ops in normal operation.
     first = routes[0][1]
     routes.append((QUARANTINE, os.path.join(first, QUARANTINE)))
+    projections: dict[tuple[str, ...], list] = {}
+
+    def routed_projection(columns: tuple[str, ...]) -> list:
+        enrich = enrichment_columns()
+        # enrich_sessions' column order: replaced in place, new appended.
+        names = [c for c in columns if c != CORRUPT_COL]
+        names += [n for n in enrich if n not in columns]
+        record = F.struct(
+            *[enrich[n].alias(n) if n in enrich else F.col(n) for n in names]
+        )
+        corrupt = F.col(CORRUPT_COL)
+        key = key_column(F.col("session_id"))
+        envelope = F.struct(
+            key.alias("partitionKey"),
+            F.coalesce(corrupt, F.to_json(record)).alias("data"),
+        )
+        return [
+            F.when(corrupt.isNull(), route_column()).otherwise(QUARANTINE),
+            shard_column(key, num_shards),
+            F.to_json(envelope),
+        ]
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         token = f"{run_scope}e{epoch_id:020d}"
@@ -227,22 +257,11 @@ def kinesis_sim_sink(
         try:
             if not all(is_published(path, token) for _route, path in routes):
                 shutil.rmtree(stage_dir, ignore_errors=True)
-                enriched = enrich_sessions(batch)
-                corrupt = F.col(CORRUPT_COL)
-                record = F.struct(*[c for c in enriched.columns if c != CORRUPT_COL])
-                key = key_column(F.col("session_id"))
-                envelope = F.struct(
-                    key.alias("partitionKey"),
-                    F.coalesce(corrupt, F.to_json(record)).alias("data"),
-                )
-                staged = _stage(
-                    stage_dir,
-                    enriched.select(
-                        F.when(corrupt.isNull(), route_column()).otherwise(QUARANTINE),
-                        shard_column(key, num_shards),
-                        F.to_json(envelope),
-                    ).collect(),
-                )
+                columns = tuple(batch.columns)
+                cols = projections.get(columns)
+                if cols is None:
+                    cols = projections[columns] = routed_projection(columns)
+                staged = _stage(stage_dir, batch.select(*cols).collect())
                 for route, path in routes:
                     publish(path, staged.get(route, []), token)
                     _consume_killpoint(first, "_killpoint_between_routes")

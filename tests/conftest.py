@@ -24,14 +24,15 @@ def sf_dir() -> str:
     return SF_DIR
 
 
-def write_source_stream(stream: str, shards: dict[int, list[list]]) -> None:
+def write_source_stream(stream: str, shards: dict[int, list[list]], first: int = 0) -> None:
     """A kinesis_sim stream written directly in its on-disk layout: for
-    each shard, one part file per list of records. A record is a session
+    each shard, one part file per list of records, indexed from `first`
+    (pass the shard's file count to append). A record is a session
     dict, or a str put on the wire as is (a malformed payload)."""
     for shard, files in shards.items():
         d = os.path.join(stream, f"shard-{shard:05d}")
-        os.makedirs(d)
-        for i, recs in enumerate(files):
+        os.makedirs(d, exist_ok=first > 0)
+        for i, recs in enumerate(files, first):
             with open(os.path.join(d, f"part-{i:08d}-src.jsonl"), "w", encoding="utf-8") as fh:
                 for rec in recs:
                     if isinstance(rec, str):

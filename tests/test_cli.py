@@ -25,6 +25,18 @@ RECORD = {
 RECORD_INTL = dict(RECORD, session_id="s-cli-2", country="Peru")
 
 
+@pytest.fixture()
+def etl_tempdir(tmp_path, monkeypatch):
+    """`etl` without --checkpoint derives its checkpoint in the system
+    temp dir from the source and destination paths. Keep it inside this
+    test's tmp_path: pytest reuses numbered tmp_path names across
+    sessions once old ones are cleaned, and a checkpoint an earlier
+    session left under the same paths would otherwise be resumed."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+
 def test_cli_list(capsys):
     assert main(["list", "--grep", "recursive"]) == 0
     out = capsys.readouterr().out
@@ -80,6 +92,14 @@ def test_cli_produce_consume_etl_roundtrip(spark, tmp_path, capsys):
         assert rows[0]["partition_key"] == sid
 
 
+def test_cli_consume_empty_stream(spark, tmp_path, capsys):
+    """`consume` of a stream that has no shard yet logs 0 records."""
+    stream = tmp_path / "stream"
+    stream.mkdir()
+    assert main(["consume", "--stream", str(stream)]) == 0
+    assert "0 records" in capsys.readouterr().out
+
+
 def test_cli_unknown_query(capsys):
     assert main(["run", "no_such_query"]) == 2
 
@@ -99,7 +119,7 @@ def test_cli_produce_missing_partition_key(tmp_path, capsys):
     assert not os.path.exists(stream) or not os.listdir(stream)
 
 
-def test_cli_etl_default_checkpoint_is_stable(tmp_path, spark, capsys):
+def test_cli_etl_default_checkpoint_is_stable(tmp_path, spark, capsys, etl_tempdir):
     """ADVICE r3: rerunning `etl` without --checkpoint must NOT
     reprocess the stream (the default checkpoint derives from the
     source/dest paths, so the second run resumes and appends nothing)."""
@@ -142,7 +162,7 @@ def test_pipeline_rejects_unknown_source_format(spark, tmp_path):
         )
 
 
-def test_cli_etl_incremental_resume(tmp_path, spark, capsys):
+def test_cli_etl_incremental_resume(tmp_path, spark, capsys, etl_tempdir):
     """Exactly-once across reruns, incremental form: a second produce
     followed by a second etl must deliver ONLY the new record to the
     destination (the stable default checkpoint resumes the offsets)."""
@@ -172,7 +192,7 @@ def test_cli_etl_incremental_resume(tmp_path, spark, capsys):
     assert got == ["s-cli-1", "s-cli-9"]  # each exactly once
 
 
-def test_cli_etl_stale_checkpoint_refuses(tmp_path, spark, capsys):
+def test_cli_etl_stale_checkpoint_refuses(tmp_path, spark, capsys, etl_tempdir):
     """VERDICT r5 (medium): regenerating the source stream at the same
     path must NOT let the derived default checkpoint silently skip
     records — the run refuses with a loud error instead."""

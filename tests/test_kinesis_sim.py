@@ -661,3 +661,103 @@ def test_routed_sink_null_country_and_per_key_order(spark, tmp_path, monkeypatch
         for sid, seen in by_key.items():
             want = [r["customer_number"] for r in recs if r["session_id"] == sid]
             assert seen == want, sid
+
+
+def test_batch_read_of_stream_without_shards_is_empty(spark, tmp_path):
+    """A stream directory with no shard-* directory plans no partition;
+    PySpark then calls read(None), which must yield nothing."""
+    kinesis_sim.register_format(spark)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    df = spark.read.format("kinesis_sim").option("path", str(empty)).load()
+    assert df.collect() == []
+
+
+def test_routed_sink_builds_its_projection_once(spark, tmp_path, monkeypatch):
+    """The sink builds its (route, shard, envelope) Columns once per
+    query and reuses them on every micro-batch; the reused
+    current_timestamp() still stamps each batch with its own T1."""
+    import json
+
+    from stream_ingestion_amazon_kinesis_spark.streaming import pipeline
+
+    calls = []
+    build = pipeline.enrichment_columns
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "enrichment_columns", counted)
+    stream = str(tmp_path / "stream")
+    dest = {"USA": str(tmp_path / "usa"), "International": str(tmp_path / "intl")}
+    batches = 3
+
+    def append(b):  # customer_number = the micro-batch's index
+        recs = [_session(f"s{b}-{i}", "USA" if i % 2 else "Peru", b) for i in range(10)]
+        write_source_stream(stream, {0: [recs]}, first=b)
+
+    append(0)
+    q = pipeline.run_kinesis_sim_pipeline(spark, stream, dest, str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+        for b in range(1, batches):
+            append(b)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len(calls) == 1
+    stamps = {}
+    for path in dest.values():
+        for r in spark.read.format("kinesis_sim").option("path", path).load().collect():
+            rec = json.loads(r.data)
+            stamps.setdefault(rec["customer_number"], set()).add(rec["processing_timestamp"])
+    assert sorted(stamps) == list(range(batches))
+    assert all(len(s) == 1 for s in stamps.values())
+    assert len(set.union(*stamps.values())) == batches
+
+
+def test_checkpoint_written_by_file_context_manager_resumes(spark, tmp_path):
+    """A checkpoint whose offset and commit logs were written by Spark's
+    default FileContext manager resumes under the session's FileSystem
+    manager: appended records land exactly once on each route, and the
+    offset log keeps its .crc checksum sidecars."""
+    import json
+
+    from stream_ingestion_amazon_kinesis_spark.streaming.pipeline import (
+        run_kinesis_sim_pipeline,
+    )
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    assert spark.conf.get(key) == pkg + "FileSystemBasedCheckpointFileManager"
+    stream = str(tmp_path / "stream")
+    dest = {"USA": str(tmp_path / "usa"), "International": str(tmp_path / "intl")}
+    ckpt = str(tmp_path / "ckpt")
+
+    def sessions(tag, n):
+        return [_session(f"{tag}{i}", "USA" if i % 3 else "Peru", i) for i in range(n)]
+
+    # 250 records per shard at the default cap of 200: two micro-batches.
+    write_source_stream(stream, {0: [sessions("a", 250)], 1: [sessions("b", 250)]})
+    spark.conf.set(key, pkg + "FileContextBasedCheckpointFileManager")
+    try:
+        run_kinesis_sim_pipeline(spark, stream, dest, ckpt, await_all_available=True).stop()
+    finally:
+        spark.conf.set(key, pkg + "FileSystemBasedCheckpointFileManager")
+    write_source_stream(stream, {0: [sessions("c", 30)], 1: [sessions("d", 30)]}, first=1)
+    run_kinesis_sim_pipeline(spark, stream, dest, ckpt, await_all_available=True).stop()
+
+    want = {"USA": [], "International": []}
+    for tag, n in (("a", 250), ("b", 250), ("c", 30), ("d", 30)):
+        for s in sessions(tag, n):
+            want["USA" if s["country"] == "USA" else "International"].append(s["session_id"])
+    for route, path in dest.items():
+        got = [
+            json.loads(r.data)["session_id"]
+            for r in spark.read.format("kinesis_sim").option("path", path).load().collect()
+        ]
+        assert sorted(got) == sorted(want[route]), route
+    offsets = os.listdir(os.path.join(ckpt, "offsets"))
+    assert {"0", "1", "2"} <= set(offsets)
+    assert {".0.crc", ".1.crc", ".2.crc"} <= set(offsets)

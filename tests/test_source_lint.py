@@ -60,3 +60,27 @@ def test_readme_surface_counts_match_registry():
         f"README says {m.groups()}, registry has "
         f"({len(QUERIES)}, {n_oracle}) — update README.md"
     )
+
+
+def test_checkpoint_file_manager_set_only_in_session():
+    """The offset and commit logs go through the checkpoint file manager
+    that `session.get_spark` sets, over the checksummed LocalFileSystem.
+    Setting the manager anywhere else forks the session default, and
+    `fs.file.impl` / RawLocalFileSystem would silently drop the `.crc`
+    sidecars that catch a corrupted offset file; no runtime test fails
+    when they go. Comments may name them."""
+    offenders, setters = [], []
+    for root, _dirs, files in os.walk(_PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path, encoding="utf-8") as fh:
+                for i, line in enumerate(fh, 1):
+                    code = line.split("#", 1)[0]
+                    if "checkpointFileManagerClass" in code:
+                        setters.append(os.path.relpath(path, _PKG))
+                    if "fs.file.impl" in code or "RawLocalFileSystem" in code:
+                        offenders.append(f"{path}:{i}: {line.strip()}")
+    assert setters == ["session.py"], setters
+    assert not offenders, "\n".join(offenders)
