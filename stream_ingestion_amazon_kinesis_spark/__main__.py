@@ -220,11 +220,6 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None) -> int:
-    # Exported before the JVM spawns so every descendant (JVM, Python
-    # DataSource workers) can address the driver — the kill -9 chaos
-    # drills (tests/test_cli.py) SIGKILL this pid from a writer commit
-    # running in a worker process.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_PID", str(os.getpid()))
     args = build_parser().parse_args(argv)
     return args.fn(args)
 

@@ -429,9 +429,9 @@ def release_cached(spark: SparkSession) -> int:
     """Release engine-cached state between independent queries.
 
     Several operators localCheckpoint bounded intermediates (iterative
-    graph edge relations, reused adjacency/similarity relations — 24
-    sites). Those blocks sit in the session's block manager until their
-    RDD is garbage-collected, and PySpark only triggers that cleanup
+    graph edge relations, reused adjacency/similarity relations). Those
+    blocks sit in the session's block manager until their RDD is
+    garbage-collected, and PySpark only triggers that cleanup
     when Python's GC drops the py4j handle — so a long-lived session
     running hundreds of independent queries (the correctness gate, a
     full-registry sweep) accumulates them. Measured: a bare 1 GiB

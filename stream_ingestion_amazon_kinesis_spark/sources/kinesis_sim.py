@@ -290,29 +290,6 @@ def guard_checkpoint(stream_dir: str, checkpoint_dir: str) -> None:
         os.replace(path + ".tmp", path)
 
 
-def _consume_killpoint(stream_dir: str, name: str) -> None:
-    """kill -9 chaos-drill hook: a file named `name` in the stream dir
-    makes the calling code deliver SIGKILL to the etl driver (pid from
-    SPARK_GRAFT_DRIVER_PID, set by __main__.main) AND to the calling
-    process at this exact point — a genuine uncontrolled death, unlike
-    the exception failpoint, which unwinds normally. Single-shot:
-    the file is consumed first, so the restarted run proceeds. Test-only;
-    two os.path.exists misses per call in normal operation."""
-    import signal
-
-    p = os.path.join(stream_dir, name)
-    if not os.path.exists(p):
-        return
-    os.remove(p)
-    pid = os.environ.get("SPARK_GRAFT_DRIVER_PID")
-    if pid and int(pid) != os.getpid():
-        try:
-            os.kill(int(pid), signal.SIGKILL)
-        except (OSError, ValueError):
-            pass
-    os.kill(os.getpid(), signal.SIGKILL)
-
-
 def shard_of(key: str, num_shards: int) -> int:
     """put_record routing: the shard a partition key lands on. crc32 is
     deterministic across processes (Python's hash() is salted) — the
@@ -348,7 +325,7 @@ def is_published(stream_dir: str, token: str) -> bool:
 def publish(stream_dir: str, staged: list, token: str | None) -> None:
     """Publish staged part files to the tail of their shards — the commit
     half of the two-phase write, shared by `KinesisSimWriter.commit` and
-    the routed streaming sink (`streaming.pipeline.kinesis_sim_sink`).
+    the routed streaming sink (`streaming.pipeline.stage_and_publish`).
 
     `staged` lists (relpath, tmp_path) pairs with relpath
     ``shard-NNNNN/part-<suffix>.jsonl``, in publish order. Files move
@@ -362,23 +339,6 @@ def publish(stream_dir: str, staged: list, token: str | None) -> None:
     attempt died. With the marker already present the staged files are
     dropped and nothing is published.
     """
-    # Crash-injection failpoint for the exactly-once tests: a file named
-    # _failpoint_before_commit in the stream dir makes the publish die
-    # AFTER the records were staged but BEFORE any is published — the
-    # torn-write moment. Single-shot (the file is consumed) and
-    # file-based because the DataSource commit runs in a separate Python
-    # worker process where a test's monkeypatch/env can't reach. No-op in
-    # normal operation.
-    failpoint = os.path.join(stream_dir, "_failpoint_before_commit")
-    if os.path.exists(failpoint):
-        os.remove(failpoint)
-        raise RuntimeError("kinesis_sim failpoint: injected crash before commit")
-    # kill -9 drill points: staged, nothing published yet / torn
-    # mid-publish. See _consume_killpoint.
-    _consume_killpoint(stream_dir, "_killpoint_before_publish")
-    kill_mid_publish = os.path.exists(
-        os.path.join(stream_dir, "_killpoint_mid_publish")
-    )
     done_marker = _done_marker(stream_dir, token) if token else None
     if done_marker and os.path.exists(done_marker):
         for _rel, tmp in staged:
@@ -428,10 +388,6 @@ def publish(stream_dir: str, staged: list, token: str | None) -> None:
             suffix = f"{token}-{suffix}"
         fname = f"part-{idx:08d}-{suffix}"
         os.replace(tmp, os.path.join(shard_dir, fname))
-        if kill_mid_publish:
-            # consume + SIGKILL after the FIRST publish: a
-            # genuinely torn multi-file publish for the drill.
-            _consume_killpoint(stream_dir, "_killpoint_mid_publish")
     if done_marker:
         os.makedirs(os.path.dirname(done_marker), exist_ok=True)
         with open(done_marker, "w", encoding="utf-8") as fh:

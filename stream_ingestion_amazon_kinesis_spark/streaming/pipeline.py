@@ -172,10 +172,10 @@ def kinesis_sim_sink(
     International, PartitionKey=session_id) as one Spark job per
     micro-batch instead of per-record put_record. The JVM computes each
     enriched record's route, shard and {"partitionKey", "data"} envelope,
-    and one `collect` brings the envelopes to the driver, which stages
-    them once, one file per route and shard, under
-    `<USA stream>/_staging/<token>/` (`_stage`) and publishes each
-    route's files with `kinesis_sim.publish`, whose commit token
+    and one `collect` brings the envelopes to the driver, where
+    `stage_and_publish` stages them once, one file per route and shard,
+    under `<USA stream>/_staging/<token>/` and publishes each route's
+    files with `kinesis_sim.publish`, whose commit token
     ``<run_scope>e<epoch>`` makes an epoch retry converge to one copy.
     Markers and tokens are scoped to the checkpoint identity (`run_scope`):
     epoch ids restart at 0 under a fresh checkpoint.
@@ -203,13 +203,7 @@ def kinesis_sim_sink(
     and of Spark's file writers, whose Hadoop local filesystem spawns a
     `chmod` process per file and directory when native libhadoop is
     absent."""
-    from ..sources.kinesis_sim import (
-        _consume_killpoint,
-        is_published,
-        key_column,
-        publish,
-        shard_column,
-    )
+    from ..sources.kinesis_sim import key_column, shard_column
 
     missing = [r for r in ROUTES if r not in dest_streams]
     if missing:
@@ -223,11 +217,7 @@ def kinesis_sim_sink(
             "kinesis_sim destination streams must sit on one filesystem "
             f"(published with os.replace); devices by path: {devices}"
         )
-    # kill -9 drill points (tests/test_cli.py) are armed by files in this
-    # stream dir: torn WAL with nothing / one route / both routes
-    # published. No-ops in normal operation.
-    first = routes[0][1]
-    routes.append((QUARANTINE, os.path.join(first, QUARANTINE)))
+    routes.append((QUARANTINE, os.path.join(routes[0][1], QUARANTINE)))
     projections: dict[tuple[str, ...], list] = {}
 
     def routed_projection(columns: tuple[str, ...]) -> list:
@@ -251,27 +241,40 @@ def kinesis_sim_sink(
         ]
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        token = f"{run_scope}e{epoch_id:020d}"
-        stage_dir = os.path.join(first, "_staging", token)
-        _consume_killpoint(first, "_killpoint_batch_start")
-        try:
-            if not all(is_published(path, token) for _route, path in routes):
-                shutil.rmtree(stage_dir, ignore_errors=True)
-                columns = tuple(batch.columns)
-                cols = projections.get(columns)
-                if cols is None:
-                    cols = projections[columns] = routed_projection(columns)
-                staged = _stage(stage_dir, batch.select(*cols).collect())
-                for route, path in routes:
-                    publish(path, staged.get(route, []), token)
-                    _consume_killpoint(first, "_killpoint_between_routes")
-            _consume_killpoint(first, "_killpoint_after_routes")
-        finally:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            with contextlib.suppress(OSError):
-                os.rmdir(os.path.dirname(stage_dir))
+        def collect() -> list:
+            columns = tuple(batch.columns)
+            cols = projections.get(columns)
+            if cols is None:
+                cols = projections[columns] = routed_projection(columns)
+            return batch.select(*cols).collect()
+
+        stage_and_publish(routes, f"{run_scope}e{epoch_id:020d}", collect)
 
     return write_batch
+
+
+def stage_and_publish(routes: list[tuple[str, str]], token: str, collect) -> None:
+    """The driver half of a routed micro-batch: stage the (route, shard,
+    envelope) rows that `collect()` returns under
+    `<first route's stream>/_staging/<token>/`, then `publish` each
+    route's files to its stream, in `routes` order, with commit token
+    `token`. When every route already holds the token's done-marker the
+    epoch is complete and `collect` is not called, so a retried epoch
+    runs no Spark job. The stage dir is cleared before staging and on
+    every exit."""
+    from ..sources.kinesis_sim import is_published, publish
+
+    stage_dir = os.path.join(routes[0][1], "_staging", token)
+    try:
+        if not all(is_published(path, token) for _route, path in routes):
+            shutil.rmtree(stage_dir, ignore_errors=True)
+            staged = _stage(stage_dir, collect())
+            for route, path in routes:
+                publish(path, staged.get(route, []), token)
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
+        with contextlib.suppress(OSError):
+            os.rmdir(os.path.dirname(stage_dir))
 
 
 def _stage(stage_dir: str, rows) -> dict[str, list[tuple[str, str]]]:

@@ -9,6 +9,7 @@ import os
 import pytest
 
 from conftest import write_source_stream
+from crash_injector import CrashInjector, Moment
 from stream_ingestion_amazon_kinesis_spark.__main__ import main
 
 RECORD = {
@@ -270,12 +271,12 @@ def test_cli_etl_appends_still_resume_with_manifest(tmp_path, spark, capsys):
     assert got == ["s-cli-1", "s-cli-app"]
 
 
-def test_cli_etl_crash_before_commit_exactly_once(tmp_path, spark, capsys):
+def test_cli_etl_crash_before_commit_exactly_once(tmp_path, spark, capsys, monkeypatch):
     """VERDICT r5 ask #3: inject a crash AFTER the routed sink staged
     the micro-batch but BEFORE `kinesis_sim.publish` publishes anything
-    (its `_failpoint_before_commit`), then restart — the retried epoch
-    must deliver every record exactly once (nothing was published, so
-    the retry republishes all)."""
+    (an exception at the first filesystem call into the USA stream's
+    shards), then restart — the retried epoch must deliver every record
+    exactly once (nothing was published, so the retry republishes all)."""
     stream = str(tmp_path / "stream")
     usa = str(tmp_path / "usa")
     intl = str(tmp_path / "intl")
@@ -293,11 +294,9 @@ def test_cli_etl_crash_before_commit_exactly_once(tmp_path, spark, capsys):
             main(["produce", "--stream", stream, "--json-string", json.dumps(rec)])
             == 0
         )
-    # Arm the failpoint in the FIRST route written (USA): commit dies
-    # before publishing a single part file.
-    os.makedirs(usa, exist_ok=True)
-    with open(os.path.join(usa, "_failpoint_before_commit"), "w") as fh:
-        fh.write("arm")
+    # Crash in the FIRST route written (USA): commit dies before
+    # publishing a single part file.
+    CrashInjector(Moment(os.path.join(usa, "shard-")), kill=False).install(monkeypatch.setattr)
     with pytest.raises(Exception, match="failpoint|Terminated with exception"):
         main(etl_args)
     # Torn write left no published records and no epoch marker.
@@ -317,37 +316,45 @@ def test_cli_etl_crash_before_commit_exactly_once(tmp_path, spark, capsys):
 
 
 KILL_DRILLS = (
-    # (kill point, route whose stream dir arms it)
-    # write_batch entry: offset WAL may be ahead, nothing published
-    ("_killpoint_batch_start", "USA"),
-    # publish: records staged, zero published (the "between task-file
+    # (drill, stream, path under it, wrapped call, crash after that call):
+    # `crash_launcher.py` SIGKILLs the etl driver at the first such call
+    # of `stage_and_publish`, or at the call after it.
+    # stage_and_publish entry: offset WAL may be ahead, nothing published
+    ("batch_start", "USA", "_staging", "rmtree", False),
+    # USA: records staged, zero published (the "between task-file
     # landing and checkpoint commit" moment)
-    ("_killpoint_before_publish", "USA"),
-    # publish mid-loop: SOME of the route's files published — the torn
-    # publish only the commit-token rollback in `publish` can repair
-    ("_killpoint_mid_publish", "USA"),
-    # first route published + done-marker, second route never started
-    ("_killpoint_between_routes", "USA"),
-    # both routes published, epoch commit log never written (torn WAL)
-    ("_killpoint_after_routes", "USA"),
-    # both routes publish in one epoch: USA published + done-marker, the
-    # International publish dies before its first file / after it
-    ("_killpoint_before_publish", "International"),
-    ("_killpoint_mid_publish", "International"),
+    ("before_publish", "USA", "shard-", None, False),
+    # USA: SOME of the route's files published — the torn publish only
+    # the commit-token rollback in `publish` can repair
+    ("mid_publish", "USA", "shard-", "replace", True),
+    # USA and International published + done-markers, the quarantine
+    # publish never started
+    ("between_routes", "International", "_epochs", "open", True),
+    # every route published, epoch commit log never written (torn WAL)
+    ("after_routes", "USA", "_quarantine/_epochs", "open", True),
+    # USA published + done-marker, the International publish dies
+    # before its first file / after it
+    ("before_publish", "International", "shard-", None, False),
+    ("mid_publish", "International", "shard-", "replace", True),
 )
+CRASH_LAUNCHER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "crash_launcher.py")
 
 
 def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
     """VERDICT r6 ask #3: kill -9 the etl DRIVER at seeded points
     spanning the whole micro-batch commit protocol, on both routes,
     restart, and assert every destination stream holds exactly one copy
-    of every record. Unlike the exception failpoint, a SIGKILL leaves
+    of every record. Unlike an injected exception, a SIGKILL leaves
     genuinely torn state: staged files, half-published epochs, offset
-    WAL ahead of the commit log. Runs each drill as a real
-    `python -m ... etl` subprocess (1 GiB driver); the armed runs and
-    the restarts are each launched concurrently to bound wall time.
+    WAL ahead of the commit log. Runs each drill as a real `etl`
+    subprocess (1 GiB driver), armed through `crash_launcher.py` and
+    restarted with `python -m ... etl`; the armed runs must die by
+    SIGKILL, and they and the restarts are each launched concurrently to
+    bound wall time.
     One malformed payload rides along: every drill must also leave it
     exactly once in the quarantine stream under the USA stream."""
+    import dataclasses
+    import signal
     import subprocess
     import sys
     import time
@@ -360,8 +367,8 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
         records.append(rec)
     malformed = '{"session_id": "s-kbad", "country": "US'
 
-    def make_topo(kp: str, route: str):
-        base = tmp_path / f"{kp.strip('_')}-{route}"
+    def make_topo(drill: str, route: str, rel: str, call: str | None, after: bool):
+        base = tmp_path / f"{drill}-{route}"
         stream, usa, intl, ckpt = (
             str(base / d) for d in ("stream", "usa", "intl", "ckpt")
         )
@@ -369,15 +376,8 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
         # Spark needed): 2 shards x 3 records, the malformed payload last
         # in shard 1.
         write_source_stream(stream, {0: [records[:3]], 1: [records[3:] + [malformed]]})
-        os.makedirs(usa)
-        os.makedirs(intl)
-        armed_dir = usa if route == "USA" else intl
-        with open(os.path.join(armed_dir, kp), "w", encoding="utf-8") as fh:
-            fh.write("arm")
+        moment = Moment(os.path.join(usa if route == "USA" else intl, rel), call, after)
         args = [
-            sys.executable,
-            "-m",
-            "stream_ingestion_amazon_kinesis_spark",
             "etl",
             "--source-stream",
             stream,
@@ -386,20 +386,17 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
             "--checkpoint",
             ckpt,
         ]
-        return args, usa, intl, armed_dir
+        armed = [sys.executable, CRASH_LAUNCHER, json.dumps(dataclasses.asdict(moment))]
+        restart = [sys.executable, "-m", "stream_ingestion_amazon_kinesis_spark"]
+        return armed + args, restart + args, usa, intl
 
-    # A stale pid from an in-process main() run in THIS process must not
-    # leak into the drills (the kill would target pytest itself).
-    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_DRIVER_PID"}
-    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
-    env["SPARK_GRAFT_CPUS"] = "4"
-
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_CPUS="4")
     topos = {drill: make_topo(*drill) for drill in KILL_DRILLS}
 
-    def launch_all():
+    def launch_all(which: int):
         return {
             drill: subprocess.Popen(
-                topos[drill][0],
+                topos[drill][which],
                 env=env,
                 stdout=subprocess.DEVNULL,
                 stderr=subprocess.DEVNULL,
@@ -423,13 +420,11 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
                 codes[drill] = "timeout"
         return codes
 
-    armed = wait_all(launch_all())
+    armed = wait_all(launch_all(0))
     for drill, code in armed.items():
-        assert code != 0 and code != "timeout", f"{drill}: armed run exited {code}"
-        # the armed file was consumed (the drill actually fired)
-        assert not os.path.exists(os.path.join(topos[drill][3], drill[0])), drill
+        assert code == -signal.SIGKILL, f"{drill}: armed run exited {code}"
 
-    restarted = wait_all(launch_all())
+    restarted = wait_all(launch_all(1))
     for drill, code in restarted.items():
         assert code == 0, f"{drill}: restart exited {code}"
 
@@ -455,14 +450,14 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
     want_usa = sorted(r["session_id"] for r in records if r["country"] == "USA")
     want_intl = sorted(r["session_id"] for r in records if r["country"] != "USA")
     for drill in KILL_DRILLS:
-        _, usa, intl, _ = topos[drill]
+        _, _, usa, intl = topos[drill]
         assert sorted(stream_sessions(usa)) == want_usa, f"{drill}: USA not exactly-once"
         assert sorted(stream_sessions(intl)) == want_intl, f"{drill}: intl not exactly-once"
         quarantined = stream_payloads(os.path.join(usa, "_quarantine"))
         assert quarantined == [malformed], f"{drill}: quarantine not exactly-once"
 
 
-def test_cli_etl_partial_epoch_retry_skips_committed_route(tmp_path, spark, capsys):
+def test_cli_etl_partial_epoch_retry_skips_committed_route(tmp_path, spark, capsys, monkeypatch):
     """Crash BETWEEN the two route writes (USA committed, International
     not): the retried epoch must skip the already-committed USA route
     (per-(epoch,route) marker) — no duplicates — and deliver the
@@ -484,11 +479,9 @@ def test_cli_etl_partial_epoch_retry_skips_committed_route(tmp_path, spark, caps
             main(["produce", "--stream", stream, "--json-string", json.dumps(rec)])
             == 0
         )
-    # Failpoint in the SECOND route (International): USA publishes and
+    # Crash in the SECOND route (International): USA publishes and
     # writes its epoch marker, then the batch dies.
-    os.makedirs(intl, exist_ok=True)
-    with open(os.path.join(intl, "_failpoint_before_commit"), "w") as fh:
-        fh.write("arm")
+    CrashInjector(Moment(os.path.join(intl, "shard-")), kill=False).install(monkeypatch.setattr)
     with pytest.raises(Exception, match="failpoint|Terminated with exception"):
         main(etl_args)
     rows = spark.read.format("kinesis_sim").option("path", usa).load().collect()

@@ -84,3 +84,22 @@ def test_checkpoint_file_manager_set_only_in_session():
                         offenders.append(f"{path}:{i}: {line.strip()}")
     assert setters == ["session.py"], setters
     assert not offenders, "\n".join(offenders)
+
+
+def test_no_crash_hooks_in_package():
+    """Crashes are injected from the tests (`tests/crash_injector.py`
+    wraps the filesystem calls from outside). A crash hook inside the
+    package is a hidden runtime switch that every micro-batch pays a
+    check for, and it covers only the moments it was placed at."""
+    banned = ("os.kill", "SPARK_GRAFT_DRIVER_PID", "_killpoint", "_failpoint")
+    offenders = []
+    for root, _dirs, files in os.walk(_PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path, encoding="utf-8") as fh:
+                for i, line in enumerate(fh, 1):
+                    if any(b in line for b in banned):
+                        offenders.append(f"{path}:{i}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
