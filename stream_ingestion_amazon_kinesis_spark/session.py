@@ -55,6 +55,9 @@ def get_spark(app_name: str = "stream_ingestion_amazon_kinesis_spark") -> SparkS
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        # Keep a whole run's progress records in `query.recentProgress`
+        # (the default keeps 100: about 14 s of ~140 ms triggers).
+        .config("spark.sql.streaming.numRecentProgressUpdates", "1000")
         # The events fixture carries parquet TIMESTAMP(NANOS), which Spark
         # has no native type for; read it as nanos-since-epoch longs and
         # convert at the catalog layer (sources/catalog.py).

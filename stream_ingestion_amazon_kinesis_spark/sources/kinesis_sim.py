@@ -32,15 +32,20 @@ instead of a driver-side loop:
 
 On-disk stream layout (a "stream" is a directory):
 
-    <stream>/shard-00000/part-<8-digit index>-<suffix>.jsonl
+    <stream>/shard-00000/part-<20-digit first sequence number>.jsonl
     <stream>/shard-00001/part-...
+    <stream>/_epochs/i-<token>     intent record of a tokened publish
     <stream>/_epochs/w-<token>     done-marker of an idempotent publish
 
 Each line is one record envelope: ``{"partitionKey": str, "data": str}``.
-`publish` gives each part file the next index of its shard, so files
-sort in append order. A record's sequence number is its 0-based
-position within the shard (part files ordered by name), mirroring
-Kinesis' monotone per-shard sequence numbers.
+A record's sequence number is its 0-based position within the shard,
+mirroring Kinesis' monotone per-shard sequence numbers; a part file is
+named by the sequence number of its first record, so name order is
+sequence order, a shard's tail is its last file's first sequence number
+plus that file's record count, and a reader finds the file that holds
+any sequence number by bisecting the listing. `publish` claims a name
+exclusively (``os.link``) and never renames over one, so a published
+record keeps its sequence number whatever other writers do.
 
 Reader and writer methods need only the stdlib and pyarrow (which
 PySpark's data source workers import anyway).
@@ -48,8 +53,9 @@ PySpark's data source workers import anyway).
 
 from __future__ import annotations
 
+import bisect
+import contextlib
 import io
-import itertools
 import json
 import os
 import re
@@ -87,43 +93,89 @@ def _shard_dirs(path: str) -> list[str]:
     )
 
 
-# Published part files carry a zero-padded per-shard index so appends
-# always sort after existing files; `publish` refuses any other name.
-_INDEXED_RE = re.compile(r"^part-\d{8}-")
+def _part_name(first_seq: int) -> str:
+    return f"part-{first_seq:020d}.jsonl"
+
+
+_PART_RE = re.compile(r"part-(\d{20})\.jsonl")
+
+
+def _first_seq(name: str) -> int:
+    """The first sequence number of the part file `name`; any other file
+    name is refused, since its records have no place in the sequence."""
+    m = _PART_RE.fullmatch(os.path.basename(name))
+    if m is None:
+        raise ValueError(
+            f"kinesis_sim: {name} is not a part-<20-digit first sequence "
+            "number>.jsonl file, so its records have no sequence numbers; "
+            "refusing to read or append to its shard"
+        )
+    return int(m.group(1))
+
+
+def _part_names(shard_dir: str) -> list[str]:
+    return sorted(f for f in os.listdir(shard_dir) if f.endswith(".jsonl"))
 
 
 def _shard_files(shard_dir: str) -> list[str]:
-    return sorted(
-        os.path.join(shard_dir, f)
-        for f in os.listdir(shard_dir)
-        if f.endswith(".jsonl")
-    )
+    return [os.path.join(shard_dir, f) for f in _part_names(shard_dir)]
+
+
+def _lines(path: str) -> list[str]:
+    """The file's non-blank lines, unparsed: one per record."""
+    with open(path, encoding="utf-8") as fh:
+        return [line for line in map(str.strip, fh) if line]
 
 
 def _iter_shard_lines(shard_dir: str):
     """Yield the shard's non-blank lines, unparsed, across its part files
     in name order — line i is the record with sequence number i."""
     for fpath in _shard_files(shard_dir):
-        with open(fpath, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    yield line
+        yield from _lines(fpath)
 
 
-def _shard_length(shard_dir: str) -> int:
-    return sum(1 for _ in _iter_shard_lines(shard_dir))
+def _shard_tail(shard_dir: str) -> int:
+    """The shard's next sequence number: its last file's first sequence
+    number plus that file's record count. Every file name is checked, so
+    a shard holding a foreign file is refused before anything lands."""
+    files = _shard_files(shard_dir)
+    firsts = [_first_seq(f) for f in files]
+    if not files:
+        return 0
+    n = len(_lines(files[-1]))
+    if not n:
+        raise ValueError(
+            f"kinesis_sim: {files[-1]} holds no record, so the next record's "
+            "name would be its own; refusing to append to its shard"
+        )
+    return firsts[-1] + n
 
 
-def _shard_slice(shard_dir: str, start: int, stop: int | None) -> tuple[list, int]:
-    """Lines [start, stop) of the shard (stop None: to its tail), and the
-    number of lines seen. Lines before the slice are counted, never
-    parsed, and reading stops at `stop`; the count is the shard's tail
-    whenever the slice came up short."""
-    lines = _iter_shard_lines(shard_dir)
-    skipped = sum(1 for _ in itertools.islice(lines, start))
-    out = list(itertools.islice(lines, None if stop is None else stop - start))
-    return out, skipped + len(out)
+def _shard_slice(shard_dir: str, start: int, stop: int) -> tuple[list, int]:
+    """Lines [start, stop) of the shard, and the sequence number after the
+    last file read, which is the shard's tail whenever the slice came up
+    short. The listing is bisected for the file that holds `start`, and
+    only the files from there up to the one that holds `stop - 1` (or
+    the last file) are opened."""
+    names = _part_names(shard_dir)
+    if not names:
+        return [], 0
+    i = max(bisect.bisect_right(names, _part_name(start)) - 1, 0)
+    out, pos = [], min(_first_seq(names[i]), start)
+    for name in names[i:]:
+        path = os.path.join(shard_dir, name)
+        if _first_seq(path) != pos:
+            raise RuntimeError(
+                f"kinesis_sim: {path} does not start at sequence number {pos}, "
+                "where the shard's previous part file ends; refusing to "
+                "renumber records"
+            )
+        lines = _lines(path)
+        out += lines[max(start - pos, 0) : max(stop - pos, 0)]
+        pos += len(lines)
+        if pos >= stop:
+            break
+    return out, pos
 
 
 _ENVELOPE = pa.schema([("partitionKey", pa.string()), ("data", pa.string())])
@@ -180,7 +232,7 @@ class KinesisSimBatchReader(DataSourceReader):
         # calls read(None) once: an empty stream reads as 0 rows.
         if partition is None:
             return iter(())
-        lines, _ = _shard_slice(partition.shard_dir, 0, None)
+        lines = list(_iter_shard_lines(partition.shard_dir))
         return iter(_parse_slice(os.path.basename(partition.shard_dir), 0, lines))
 
 
@@ -204,7 +256,7 @@ class KinesisSimStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         # TRIM_HORIZON -> start of every shard; LATEST -> current tail.
         if self.starting_position == "LATEST":
-            return {os.path.basename(d): _shard_length(d) for d in _shard_dirs(self.path)}
+            return {os.path.basename(d): _shard_tail(d) for d in _shard_dirs(self.path)}
         return {os.path.basename(d): 0 for d in _shard_dirs(self.path)}
 
     def read(self, start: dict):
@@ -284,10 +336,7 @@ def guard_checkpoint(stream_dir: str, checkpoint_dir: str) -> None:
             "to reprocess from scratch."
         )
     if current.keys() - seen.keys():
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        with open(path + ".tmp", "w", encoding="utf-8") as fh:
-            json.dump(current, fh, sort_keys=True)
-        os.replace(path + ".tmp", path)
+        _write_json(path, current)
 
 
 def shard_of(key: str, num_shards: int) -> int:
@@ -327,17 +376,28 @@ def publish(stream_dir: str, staged: list, token: str | None) -> None:
     half of the two-phase write, shared by `KinesisSimWriter.commit` and
     the routed streaming sink (`streaming.pipeline.stage_and_publish`).
 
-    `staged` lists (relpath, tmp_path) pairs with relpath
-    ``shard-NNNNN/part-<suffix>.jsonl``, in publish order. Files move
-    with os.replace, so every tmp_path must sit on the stream's
-    filesystem. `token` (None for a plain append) is the idempotence
-    token of an epoch retry, ``<checkpoint-scope>e<epoch>``: it is
-    embedded in the published file names, a torn previous attempt of the
-    same token is rolled back before publishing, and a done-marker
-    ``_epochs/w-<token>`` is recorded after the last file — so a retried
-    epoch converges to exactly one copy no matter where the previous
-    attempt died. With the marker already present the staged files are
-    dropped and nothing is published.
+    `staged` lists (relpath, tmp_path) pairs in publish order; only the
+    shard directory of relpath (``shard-NNNNN/...``) is used. Each staged
+    file is published under its first sequence number, read from the
+    shard's tail, by hard-linking it to that name: the link fails if the
+    name exists, so when another writer took the tail first the tail is
+    read again and the claim retried, and no published record is ever
+    renumbered. Every tmp_path must sit on the stream's filesystem; it
+    is removed once claimed, and a file without records is not
+    published.
+
+    `token` (None for a plain append) is the idempotence token of an
+    epoch retry, ``<checkpoint-scope>e<epoch>``. Before its first claim
+    `publish` records the names it is about to claim in the intent
+    record ``_epochs/i-<token>``, and once every file landed the intent
+    record becomes the done-marker ``_epochs/w-<token>``. A retry with
+    the marker present drops the staged files and publishes nothing; a
+    retry of a torn attempt first removes the files its intent record
+    lists, which restores the pre-epoch tail as long as no other writer
+    claimed those names in between (the routed sink is the only writer
+    of its destination streams). So a retried epoch converges to exactly
+    one copy, at the same sequence numbers, wherever the previous
+    attempt died.
     """
     done_marker = _done_marker(stream_dir, token) if token else None
     if done_marker and os.path.exists(done_marker):
@@ -345,53 +405,52 @@ def publish(stream_dir: str, staged: list, token: str | None) -> None:
             if os.path.exists(tmp):
                 os.remove(tmp)
         return
-    if token and os.path.isdir(stream_dir):
-        # Roll back a TORN previous attempt of this same token: any
-        # published file carrying the token sits at its shard's tail (it
-        # was appended by the dead attempt and the epoch never
-        # committed), so deleting it restores the pre-epoch state and the
-        # republish below lands at the same sequence numbers.
-        for d in _shard_dirs(stream_dir):
-            for f in _shard_files(d):
-                if f"-{token}-" in os.path.basename(f):
-                    os.remove(f)
-    # Sequence numbers are defined by FILE-NAME order within a shard
-    # (_iter_shard_lines), so appended files MUST sort after every
-    # existing file or a later append would renumber records a
-    # checkpointed reader already consumed. Each new file therefore gets
-    # a zero-padded per-shard index = count of existing files + arrival
-    # order. This assumes ONE writer per stream: two concurrent
-    # publishers can both count the same files and take the same index
-    # (ROADMAP item 2 reproduced both taking index 1), and the suffix
-    # does not order them. Any other name could sort after a new index,
-    # so a shard holding one is refused before a single file moves.
-    next_idx: dict[str, int] = {}
-    for rel, _tmp in staged:
-        shard_dir = os.path.join(stream_dir, os.path.dirname(rel))
-        if shard_dir not in next_idx:
-            os.makedirs(shard_dir, exist_ok=True)
-            existing = [os.path.basename(f) for f in _shard_files(shard_dir)]
-            odd = [f for f in existing if not _INDEXED_RE.match(f)]
-            if odd:
-                raise ValueError(
-                    f"kinesis_sim: {os.path.join(shard_dir, odd[0])} is not a "
-                    "part-<8-digit index>-... file, so an append could sort "
-                    "before it and renumber records; refusing to publish"
-                )
-            next_idx[shard_dir] = len(existing)
+    intent = os.path.join(stream_dir, "_epochs", f"i-{token}") if token else None
+    if intent and os.path.exists(intent):
+        with open(intent, encoding="utf-8") as fh:
+            for rel in json.load(fh):
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(stream_dir, rel))
+    pending = []
     for rel, tmp in staged:
-        shard_dir = os.path.join(stream_dir, os.path.dirname(rel))
-        idx = next_idx[shard_dir]
-        next_idx[shard_dir] = idx + 1
-        suffix = os.path.basename(rel)[len("part-"):]
-        if token:
-            suffix = f"{token}-{suffix}"
-        fname = f"part-{idx:08d}-{suffix}"
-        os.replace(tmp, os.path.join(shard_dir, fname))
+        n = len(_lines(tmp))
+        if n:
+            pending.append((os.path.dirname(rel), tmp, n))
+        else:
+            os.remove(tmp)
+    for shard in dict.fromkeys(shard for shard, _tmp, _n in pending):
+        os.makedirs(os.path.join(stream_dir, shard), exist_ok=True)
+    claimed: list[str] = []
+    while True:
+        tails = {shard: _shard_tail(os.path.join(stream_dir, shard)) for shard, _t, _n in pending}
+        plan = []
+        for shard, _tmp, n in pending:
+            plan.append(os.path.join(shard, _part_name(tails[shard])))
+            tails[shard] += n
+        if intent:
+            _write_json(intent, claimed + plan)
+        landed = 0
+        for rel, (_shard, tmp, _n) in zip(plan, pending):
+            try:
+                os.link(tmp, os.path.join(stream_dir, rel))
+            except FileExistsError:
+                break  # another writer took this tail: read the tails again
+            os.remove(tmp)
+            claimed.append(rel)
+            landed += 1
+        pending = pending[landed:]
+        if not pending:
+            break
     if done_marker:
-        os.makedirs(os.path.dirname(done_marker), exist_ok=True)
-        with open(done_marker, "w", encoding="utf-8") as fh:
-            fh.write("ok")
+        os.replace(intent, done_marker)
+
+
+def _write_json(path: str, value) -> None:
+    """Replace `path` atomically with `value` as JSON."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path + ".tmp", "w", encoding="utf-8") as fh:
+        json.dump(value, fh)
+    os.replace(path + ".tmp", path)
 
 
 @dataclass
@@ -513,6 +572,11 @@ def register_format(spark) -> None:
 # ---------------------------------------------------------------------------
 
 
+# Version of the on-disk layout, part of the cached stream's path, so a
+# stream cached in an earlier layout is rebuilt instead of refused.
+_LAYOUT_VERSION = 2
+
+
 def _stream_cache_path(sf_dir: str) -> str:
     import tempfile
 
@@ -523,7 +587,7 @@ def _stream_cache_path(sf_dir: str) -> str:
         tempfile.gettempdir(),
         "spark_graft_kinesis_sim",
         tag,
-        f"events_{fixture_fingerprint(sf_dir)}",
+        f"events_v{_LAYOUT_VERSION}_{fixture_fingerprint(sf_dir)}",
     )
 
 

@@ -38,9 +38,12 @@ staging the collected rows in order.
 from __future__ import annotations
 
 import contextlib
+import datetime
 import hashlib
 import os
 import shutil
+import time
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -161,6 +164,21 @@ def run_to_memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
 QUARANTINE = "_quarantine"
 
 
+# The batch column that carries the driver's T1 stamp into the projection.
+_T1_COL = "__processing_timestamp_text"
+
+
+def t1_text(epoch_us: int, time_zone: str) -> str:
+    """The text Spark's `to_json` writes for the timestamp `epoch_us`
+    (microseconds since the epoch) in session time zone `time_zone`:
+    yyyy-MM-dd'T'HH:mm:ss.SSSXXX, milliseconds truncated, 'Z' for a zero
+    offset."""
+    utc = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    at = (utc + datetime.timedelta(microseconds=epoch_us)).astimezone(ZoneInfo(time_zone))
+    text = at.isoformat(timespec="milliseconds")
+    return text[: -len("+00:00")] + "Z" if text.endswith("+00:00") else text
+
+
 def kinesis_sim_sink(
     dest_streams: dict[str, str],
     num_shards: int = 4,
@@ -189,13 +207,21 @@ def kinesis_sim_sink(
 
     `dest_streams` maps route name ('USA'/'International') to a stream
     directory; the directories are created here and must sit on one
-    filesystem, since publishing moves the staged files with os.replace.
+    filesystem, since publishing hard-links the staged files.
 
     The (route, shard, envelope) Columns are built once per query, on
     its first batch, from `enrichment_columns` (keyed on the batch's
-    column names); each batch runs `batch.select(*cols).collect()`. The
-    Columns stay unresolved, so every batch's query stamps its own
-    `processing_timestamp` (T1).
+    column names); each batch runs `batch.select(*cols).collect()`.
+    `processing_timestamp` (T1) is stamped on the driver once per batch,
+    as the reference stamps it on the consumer host (consumer.py:126-129):
+    the text `to_json` writes for a timestamp in the session time zone
+    (`t1_text`), added to the batch as a string literal column that the
+    Columns reference. A string literal reaches the generated code as a
+    reference object, so every batch of the query runs the same compiled
+    code; a timestamp literal would be inlined, and each batch would
+    compile and warm up code of its own. T1 stays the record's last
+    field, and the destination bytes are those `to_json` writes for the
+    timestamp.
 
     The driver holds one micro-batch's envelopes; the kinesis_sim source
     caps a micro-batch at `maxFetchRecordsPerShard` records per shard.
@@ -215,13 +241,15 @@ def kinesis_sim_sink(
     if len(set(devices.values())) > 1:
         raise ValueError(
             "kinesis_sim destination streams must sit on one filesystem "
-            f"(published with os.replace); devices by path: {devices}"
+            f"(published with os.link); devices by path: {devices}"
         )
     routes.append((QUARANTINE, os.path.join(routes[0][1], QUARANTINE)))
-    projections: dict[tuple[str, ...], list] = {}
+    # By the batch's column names: the routed Columns and the session time zone.
+    projections: dict[tuple[str, ...], tuple[list, str]] = {}
 
     def routed_projection(columns: tuple[str, ...]) -> list:
-        enrich = enrichment_columns()
+        enrich = enrichment_columns(with_processing_ts=False)
+        enrich["processing_timestamp"] = F.col(_T1_COL)
         # enrich_sessions' column order: replaced in place, new appended.
         names = [c for c in columns if c != CORRUPT_COL]
         names += [n for n in enrich if n not in columns]
@@ -243,10 +271,12 @@ def kinesis_sim_sink(
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         def collect() -> list:
             columns = tuple(batch.columns)
-            cols = projections.get(columns)
-            if cols is None:
-                cols = projections[columns] = routed_projection(columns)
-            return batch.select(*cols).collect()
+            if columns not in projections:
+                zone = batch.sparkSession.conf.get("spark.sql.session.timeZone")
+                projections[columns] = routed_projection(columns), zone
+            cols, zone = projections[columns]
+            t1 = F.lit(t1_text(time.time_ns() // 1000, zone))
+            return batch.withColumn(_T1_COL, t1).select(*cols).collect()
 
         stage_and_publish(routes, f"{run_scope}e{epoch_id:020d}", collect)
 
@@ -260,8 +290,10 @@ def stage_and_publish(routes: list[tuple[str, str]], token: str, collect) -> Non
     route's files to its stream, in `routes` order, with commit token
     `token`. When every route already holds the token's done-marker the
     epoch is complete and `collect` is not called, so a retried epoch
-    runs no Spark job. The stage dir is cleared before staging and on
-    every exit."""
+    runs no Spark job. The stage dir is cleared on every exit, and before
+    staging: a dead attempt's staged file may already be hard-linked into
+    a stream, and writing the retry's rows into it would rewrite a
+    published part file in place."""
     from ..sources.kinesis_sim import is_published, publish
 
     stage_dir = os.path.join(routes[0][1], "_staging", token)

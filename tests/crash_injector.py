@@ -1,7 +1,7 @@
 """Crash injection for the exactly-once tests, from outside the package.
 
 `CrashInjector.install` wraps the filesystem calls that staging and
-publishing make (os.replace, os.remove, os.makedirs, os.rmdir,
+publishing make (os.link, os.replace, os.remove, os.makedirs, os.rmdir,
 shutil.rmtree and a write-mode open) and counts them while
 `streaming.pipeline.stage_and_publish` runs, on the thread that entered
 it. Nested calls count too (os.makedirs creating a parent, the
@@ -24,7 +24,14 @@ import shutil
 import signal
 import threading
 
-WRAPPED = ((os, "replace"), (os, "remove"), (os, "makedirs"), (os, "rmdir"), (shutil, "rmtree"))
+WRAPPED = (
+    (os, "link"),
+    (os, "replace"),
+    (os, "remove"),
+    (os, "makedirs"),
+    (os, "rmdir"),
+    (shutil, "rmtree"),
+)
 
 
 class InjectedCrash(RuntimeError):

@@ -326,16 +326,16 @@ KILL_DRILLS = (
     ("before_publish", "USA", "shard-", None, False),
     # USA: SOME of the route's files published — the torn publish only
     # the commit-token rollback in `publish` can repair
-    ("mid_publish", "USA", "shard-", "replace", True),
+    ("mid_publish", "USA", "shard-", "link", True),
     # USA and International published + done-markers, the quarantine
     # publish never started
-    ("between_routes", "International", "_epochs", "open", True),
+    ("between_routes", "International", "_epochs/w-", "replace", True),
     # every route published, epoch commit log never written (torn WAL)
-    ("after_routes", "USA", "_quarantine/_epochs", "open", True),
+    ("after_routes", "USA", "_quarantine/_epochs/w-", "replace", True),
     # USA published + done-marker, the International publish dies
     # before its first file / after it
     ("before_publish", "International", "shard-", None, False),
-    ("mid_publish", "International", "shard-", "replace", True),
+    ("mid_publish", "International", "shard-", "link", True),
 )
 CRASH_LAUNCHER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "crash_launcher.py")
 

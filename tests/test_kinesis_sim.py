@@ -402,8 +402,8 @@ def test_commit_token_makes_appends_idempotent(tmp_path):
     (the streaming sink's (checkpoint-scope, epoch) identity) converges
     to exactly one copy across retries — (a) a retry after the writer
     done-marker landed publishes nothing; (b) a retry after a TORN
-    attempt (marker missing, files published) rolls the token's files
-    back before republishing at the same sequence numbers; (c) a
+    attempt (intent record present, marker missing, files published)
+    rolls the files its intent record lists back before republishing at the same sequence numbers; (c) a
     different token appends normally."""
     import json as _json
 
@@ -446,19 +446,22 @@ def test_commit_token_makes_appends_idempotent(tmp_path):
     assert records() == first
     assert os.listdir(staging) == []
 
-    # (b) torn attempt: marker gone, token files still published — the
-    # retry must roll them back and republish, not double-append
-    os.remove(marker)
-    token_files_before = [
-        f
+    # (b) torn attempt: the intent record listing the token's files is
+    # there, the done-marker is not — the retry must roll the listed
+    # files back and republish, not double-append
+    intent = os.path.join(path, "_epochs", "i-scopeAe1")
+    os.replace(marker, intent)
+    with open(intent, encoding="utf-8") as fh:
+        listed = _json.load(fh)
+    assert sorted(listed) == sorted(
+        os.path.relpath(f, path)
         for d in kinesis_sim._shard_dirs(path)
         for f in kinesis_sim._shard_files(d)
-        if "-scopeAe1-" in os.path.basename(f)
-    ]
-    assert token_files_before  # the token is actually in the file names
+    )
     write("scopeAe1")
     assert records() == first
     assert os.path.exists(marker)
+    assert not os.path.exists(intent)
 
     # (c) a new token appends
     write("scopeAe2")
@@ -475,7 +478,7 @@ def test_slice_reads_match_full_read_filtered(tmp_path):
     files = [[{"session_id": f"s{f}-{i}"} for i in range(n)] for f, n in enumerate((3, 1, 4))]
     write_source_stream(stream, {0: files})
     shard = kinesis_sim._shard_dirs(stream)[0]
-    with open(os.path.join(shard, "part-00000001-src.jsonl"), "a", encoding="utf-8") as fh:
+    with open(os.path.join(shard, f"part-{3:020d}.jsonl"), "a", encoding="utf-8") as fh:
         fh.write("\n")
 
     def rows(batches):
@@ -507,13 +510,13 @@ def test_guard_checkpoint_fingerprints_first_part_files(tmp_path):
     write_source_stream(stream, {0: [[{"session_id": "a"}]]})
     kinesis_sim.guard_checkpoint(stream, ckpt)
     write_source_stream(stream, {1: [[{"session_id": "b"}]]})
-    with open(os.path.join(stream, "shard-00000", "part-00000001-x.jsonl"), "w") as fh:
+    with open(os.path.join(stream, "shard-00000", f"part-{1:020d}.jsonl"), "w") as fh:
         fh.write('{"partitionKey": "a", "data": "{}"}\n')
     kinesis_sim.guard_checkpoint(stream, ckpt)
     with open(os.path.join(ckpt, "_source_shards.json")) as fh:
         assert sorted(json.load(fh)) == ["shard-00000", "shard-00001"]
 
-    first = os.path.join(stream, "shard-00001", "part-00000000-src.jsonl")
+    first = os.path.join(stream, "shard-00001", f"part-{0:020d}.jsonl")
     st = os.stat(first)
     os.utime(first, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
     with pytest.raises(kinesis_sim.StaleCheckpointError, match="stale checkpoint.*shard-00001"):
@@ -695,7 +698,7 @@ def test_routed_sink_builds_its_projection_once(spark, tmp_path, monkeypatch):
 
     def append(b):  # customer_number = the micro-batch's index
         recs = [_session(f"s{b}-{i}", "USA" if i % 2 else "Peru", b) for i in range(10)]
-        write_source_stream(stream, {0: [recs]}, first=b)
+        write_source_stream(stream, {0: [recs]})
 
     append(0)
     q = pipeline.run_kinesis_sim_pipeline(spark, stream, dest, str(tmp_path / "ckpt"))
@@ -745,7 +748,7 @@ def test_checkpoint_written_by_file_context_manager_resumes(spark, tmp_path):
         run_kinesis_sim_pipeline(spark, stream, dest, ckpt, await_all_available=True).stop()
     finally:
         spark.conf.set(key, pkg + "FileSystemBasedCheckpointFileManager")
-    write_source_stream(stream, {0: [sessions("c", 30)], 1: [sessions("d", 30)]}, first=1)
+    write_source_stream(stream, {0: [sessions("c", 30)], 1: [sessions("d", 30)]})
     run_kinesis_sim_pipeline(spark, stream, dest, ckpt, await_all_available=True).stop()
 
     want = {"USA": [], "International": []}
@@ -761,3 +764,70 @@ def test_checkpoint_written_by_file_context_manager_resumes(spark, tmp_path):
     offsets = os.listdir(os.path.join(ckpt, "offsets"))
     assert {"0", "1", "2"} <= set(offsets)
     assert {".0.crc", ".1.crc", ".2.crc"} <= set(offsets)
+
+
+@pytest.mark.parametrize("zone", ["UTC", "Asia/Kolkata", "America/Los_Angeles"])
+def test_driver_t1_text_equals_to_json(spark, zone):
+    """The sink stamps T1 on the driver as text: for any instant it must
+    be what `to_json` writes for that timestamp in the session time zone
+    (milliseconds truncated, both sides of a DST change, a whole second,
+    an instant before 1970)."""
+    import json
+
+    from stream_ingestion_amazon_kinesis_spark.streaming.pipeline import t1_text
+
+    instants = [
+        1_792_468_800_123_456,  # 2026-10-19, summer time in Los Angeles
+        1_797_811_200_999_999,  # 2026-12-20, winter time
+        1_700_000_000_000_000,
+        1_000,
+        -86_400_000_001,
+    ]
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, zone)
+    try:
+        rows = (
+            spark.createDataFrame([(us,) for us in instants], "us long")
+            .select(F.to_json(F.struct(F.timestamp_micros("us").alias("t"))).alias("j"))
+            .collect()
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert [json.loads(r.j)["t"] for r in rows] == [t1_text(us, zone) for us in instants]
+
+
+def test_routed_sink_compiles_code_on_its_first_batch_only(spark, tmp_path):
+    """Every micro-batch of the routed pipeline runs the same generated
+    code: batches 2 and 3 compile nothing, so the T1 stamp must not be
+    inlined into the code as a literal."""
+    from stream_ingestion_amazon_kinesis_spark.streaming.pipeline import run_kinesis_sim_pipeline
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME()
+    stream = str(tmp_path / "stream")
+    dest = {"USA": str(tmp_path / "usa"), "International": str(tmp_path / "intl")}
+
+    def append(b):
+        recs = [_session(f"s{b}-{i}", "USA" if i % 2 else "Peru", b) for i in range(10)]
+        write_source_stream(stream, {0: [recs], 1: [recs[::-1]]})
+
+    append(0)
+    q = run_kinesis_sim_pipeline(spark, stream, dest, str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+        for b in (1, 2):
+            before = compiled.getCount()
+            append(b)
+            q.processAllAvailable()
+            assert compiled.getCount() == before, f"batch {b + 1} compiled code"
+    finally:
+        q.stop()
+    batches = [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+    assert len(batches) == 3
+
+
+def test_session_keeps_a_whole_runs_progress(spark):
+    """`query.recentProgress` keeps 1000 records, so a run of more than
+    100 micro-batches (the default) is covered whole."""
+    assert spark.conf.get("spark.sql.streaming.numRecentProgressUpdates") == "1000"

@@ -46,7 +46,7 @@ class _Stream:
             d = os.path.join(self.path, sid)
             os.makedirs(d, exist_ok=True)
             held = self.shards.setdefault(sid, [])
-            name = f"part-{len(os.listdir(d)):08d}-t.jsonl"
+            name = f"part-{len(held):020d}.jsonl"
             with open(os.path.join(d, name), "w", encoding="utf-8") as fh:
                 for key, data in recs:
                     fh.write(json.dumps({"partitionKey": key, "data": data}) + "\n")

@@ -8,8 +8,10 @@ the filesystem calls it makes. Then, for every call k, a forked child
 runs the same epoch and crashes just before call k, once by SIGKILL and
 once by exception, and the parent retries the epoch with no crash. After
 each retry the streams must equal the crash-free run's file for file
-(names carry each file's index, so sequence numbers are equal too),
-every route must hold its rows once, and no staging may be left.
+(names carry each file's first sequence number, so sequence numbers are
+equal too), every route must hold its rows once, and no staging may be
+left. The retry must not open for writing a file that has a second hard
+link: a staged file the dead attempt already published.
 
 The test runs this file as a script in one fresh interpreter, which
 forks once per crash; the pytest process holds py4j threads and never
@@ -18,6 +20,7 @@ forks. The script prints one JSON report line.
 
 from __future__ import annotations
 
+import builtins
 import collections
 import json
 import os
@@ -44,7 +47,7 @@ def _routes(base: str) -> list[tuple[str, str]]:
     usa, intl = os.path.join(base, "usa"), os.path.join(base, "intl")
     for stream in (usa, intl):
         os.makedirs(os.path.join(stream, "shard-00000"))
-        part = os.path.join(stream, "shard-00000", "part-00000000-src.jsonl")
+        part = os.path.join(stream, "shard-00000", f"part-{0:020d}.jsonl")
         with open(part, "w", encoding="utf-8") as fh:
             fh.write(json.dumps({"partitionKey": "old", "data": "old"}) + "\n")
     return [("USA", usa), ("International", intl), ("_quarantine", os.path.join(usa, "_quarantine"))]
@@ -86,6 +89,24 @@ def _problems(base: str, routes, want: dict[str, str | None]) -> list[str]:
         diff = sorted(k for k in have.keys() | want.keys() if have.get(k, 0) != want.get(k, 0))
         problems.append(f"differs from the crash-free run at {diff}")
     return problems
+
+
+def _linked_writes(run) -> list[str]:
+    """Call `run()`; return the files it opened for writing while they
+    had another hard link."""
+    found, real_open = [], builtins.open
+
+    def checked(file, mode="r", *args, **kwargs):
+        if any(c in mode for c in "wax+") and os.path.exists(file) and os.stat(file).st_nlink > 1:
+            found.append(file)
+        return real_open(file, mode, *args, **kwargs)
+
+    builtins.open = checked
+    try:
+        run()
+    finally:
+        builtins.open = real_open
+    return found
 
 
 def crash_at_every_call(workdir: str) -> dict:
@@ -132,7 +153,8 @@ def crash_at_every_call(workdir: str) -> dict:
                 report[outcome].append(k)
             elif not kill and os.WIFEXITED(status) and os.WEXITSTATUS(status) == 0:
                 report[outcome].append(k)
-            run(routes)
+            for path in _linked_writes(lambda: run(routes)):
+                report["failures"].append(f"{outcome} at {k}: retry wrote into published {path}")
             report["failures"] += [f"{outcome} at {k}: {p}" for p in _problems(base, routes, want)]
     return report
 
