@@ -103,35 +103,6 @@ EXTRA_PLAN_BUILDERS: dict[
 RELEASE_HOOKS: list[Callable[[], None]] = []
 
 
-def guard_oracle_env_override(
-    query: str, var: str, frozen: str | None
-) -> None:
-    """Fail fast when an engine-side env override would silently desync
-    an exact-oracle query from its STATIC DuckDB oracle (ADVICE r9: the
-    overrides were guarded only by a docstring convention, so running
-    the oracle gate with one set produced false value mismatches with
-    no hint at the cause). Perf experiments that don't oracle-compare
-    opt out explicitly with SPARK_GRAFT_UNSAFE_ENV_OVERRIDES=1.
-
-    `frozen` is the value the OPERATOR captured at module import — the
-    one actually in effect (ADVICE r10: re-reading os.environ here let
-    a var set after import raise spuriously, and a var UNSET after
-    import let an active override pass unguarded). Callers pass their
-    import-time module constant."""
-    import os
-
-    if frozen and os.environ.get("SPARK_GRAFT_UNSAFE_ENV_OVERRIDES") != "1":
-        raise RuntimeError(
-            f"{query}: env override {var}={frozen!r} was captured at import "
-            "and is in effect, but this query's DuckDB oracle derives the "
-            "same parameter adaptively and cannot see the override — an "
-            "oracle comparison would report a false value mismatch. Unset "
-            "it and restart, or set SPARK_GRAFT_UNSAFE_ENV_OVERRIDES=1 to "
-            "acknowledge (perf experiments only, never while "
-            "oracle-comparing)."
-        )
-
-
 def register(
     name: str,
     oracle: str | None = None,

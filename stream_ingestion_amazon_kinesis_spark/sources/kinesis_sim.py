@@ -521,8 +521,9 @@ class KinesisSimDataSource(DataSource):
       maxFetchRecordsPerShard  per-shard per-batch cap, default 200
                                (consumer.py:115's Limit=200)       [stream read]
       numShards                shard count on write, default 4
-      partitionKeyColumn       routing column on write, default partition_key
-      dataColumn               payload column on write, default data
+
+    A written DataFrame carries its routing key in `partition_key` and
+    its payload in `data`.
     """
 
     @classmethod
@@ -555,10 +556,7 @@ class KinesisSimDataSource(DataSource):
                 for f in _shard_files(d):
                     os.remove(f)
         return KinesisSimWriter(
-            path,
-            int(self.options.get("numShards", "4")),
-            self.options.get("partitionKeyColumn", "partition_key"),
-            self.options.get("dataColumn", "data"),
+            path, int(self.options.get("numShards", "4")), "partition_key", "data"
         )
 
 

@@ -163,6 +163,9 @@ def run_to_memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
 # USA destination stream: the analog of the Firehose `errors/` prefix.
 QUARANTINE = "_quarantine"
 
+# Shards per destination stream.
+DEST_SHARDS = 4
+
 
 # The batch column that carries the driver's T1 stamp into the projection.
 _T1_COL = "__processing_timestamp_text"
@@ -179,11 +182,7 @@ def t1_text(epoch_us: int, time_zone: str) -> str:
     return text[: -len("+00:00")] + "Z" if text.endswith("+00:00") else text
 
 
-def kinesis_sim_sink(
-    dest_streams: dict[str, str],
-    num_shards: int = 4,
-    run_scope: str = "default",
-):
+def kinesis_sim_sink(dest_streams: dict[str, str], run_scope: str = "default"):
     """foreachBatch body writing each routed split to a kinesis_sim
     DESTINATION STREAM — the reference's dest_streams demux
     (consumer.py:160-171: country == 'USA' -> USA stream, else
@@ -264,7 +263,7 @@ def kinesis_sim_sink(
         )
         return [
             F.when(corrupt.isNull(), route_column()).otherwise(QUARANTINE),
-            shard_column(key, num_shards),
+            shard_column(key, DEST_SHARDS),
             F.to_json(envelope),
         ]
 

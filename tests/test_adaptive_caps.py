@@ -1,6 +1,6 @@
 """Cross-engine parity of the data-adaptive blocking-cap formulas.
 
-The dedup family's hot-token cap default is computed in Python on the
+The dedup family's hot-token cap is computed in Python on the
 Spark side (`token_df_cap`) and as a scalar subquery inside the DuckDB
 oracle (`TOKEN_DF_CAP_SQL`). Both reduce to GREATEST(64,
 CEIL(4*SQRT(n))) — IEEE sqrt is correctly rounded and *4 is an exact
@@ -8,6 +8,10 @@ power-of-two scaling, so the two must agree bit-for-bit at ANY corpus
 size. This pins that claim over 12 orders of magnitude so a future
 formula edit that breaks parity (e.g. a multiplier that isn't a power
 of two applied before the sqrt) fails here, not in the gate.
+
+The operators that load a fixture table themselves take N from the
+parquet footers (`table_rowcount`), the oracles from COUNT(*): the two
+must be the same number, and building the plan must run no count job.
 """
 
 from __future__ import annotations
@@ -20,18 +24,22 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from stream_ingestion_amazon_kinesis_spark.operators.dedup import (
-    _LSH_BUCKET_CAP_ENV,
-    _TOKEN_DF_CAP_ENV,
     lsh_bucket_cap,
+    minhash_lsh_neardup,
+    shingle_jaccard_pairs,
     token_df_cap,
+)
+from stream_ingestion_amazon_kinesis_spark.operators.similarity import (
+    embedding_neardup_ivf,
+)
+from stream_ingestion_amazon_kinesis_spark.sources.catalog import (
+    load_table,
+    table_rowcount,
 )
 
 _con = duckdb.connect()
 
 
-@pytest.mark.skipif(
-    bool(_TOKEN_DF_CAP_ENV), reason="env override pins the cap; formula unused"
-)
 @settings(max_examples=300, deadline=None)
 @given(st.integers(min_value=0, max_value=10**12))
 def test_token_df_cap_matches_oracle_formula(n):
@@ -41,9 +49,6 @@ def test_token_df_cap_matches_oracle_formula(n):
     assert token_df_cap(n) == sql
 
 
-@pytest.mark.skipif(
-    bool(_LSH_BUCKET_CAP_ENV), reason="env override pins the cap; formula unused"
-)
 @settings(max_examples=100, deadline=None)
 @given(st.integers(min_value=0, max_value=10**12))
 def test_lsh_bucket_cap_monotone_and_bounded(n):
@@ -62,33 +67,23 @@ def test_cap_values_at_fixture_sizes():
     assert lsh_bucket_cap(5000) == 142
 
 
-def test_oracle_env_override_guard(monkeypatch):
-    """ADVICE r9: an engine-only env override (the static oracle derives
-    the same parameter adaptively and cannot see it) must fail FAST with
-    a clear message instead of surfacing as a confusing value mismatch
-    at gate time — unless the experimenter explicitly acknowledges.
+@pytest.mark.parametrize("table", ["documents", "embeddings"])
+def test_footer_rowcount_equals_scan_count(spark, sf_dir, table):
+    assert table_rowcount(sf_dir, table) == load_table(spark, sf_dir, table).count()
 
-    ADVICE r10: the guard judges the IMPORT-TIME captured value the
-    operator actually uses (passed by the caller), not a live
-    os.environ read — a var set after import must not raise (the engine
-    still runs the oracle-synced default) and a var unset after import
-    must still raise (the override is active)."""
-    from stream_ingestion_amazon_kinesis_spark.plans.registry import (
-        guard_oracle_env_override,
-    )
 
-    monkeypatch.delenv("SPARK_GRAFT_UNSAFE_ENV_OVERRIDES", raising=False)
-    # no frozen override -> no-op, even if the var is set NOW (the
-    # operator module captured None at import and still runs defaults)
-    monkeypatch.setenv("SPARK_GRAFT_IVF_CELLS", "128")
-    guard_oracle_env_override("ann_ivf_topk", "SPARK_GRAFT_IVF_CELLS", None)
-    # frozen override -> loud failure naming the query, the var, and
-    # the opt-out — even if the var was unset after import
-    monkeypatch.delenv("SPARK_GRAFT_IVF_CELLS", raising=False)
-    with pytest.raises(RuntimeError, match="SPARK_GRAFT_IVF_CELLS"):
-        guard_oracle_env_override(
-            "ann_ivf_topk", "SPARK_GRAFT_IVF_CELLS", "128"
-        )
-    # explicit acknowledgment -> allowed (perf experiments)
-    monkeypatch.setenv("SPARK_GRAFT_UNSAFE_ENV_OVERRIDES", "1")
-    guard_oracle_env_override("ann_ivf_topk", "SPARK_GRAFT_IVF_CELLS", "128")
+@pytest.mark.parametrize(
+    "build", [minhash_lsh_neardup, shingle_jaccard_pairs, embedding_neardup_ivf]
+)
+def test_cap_sizing_runs_no_count(spark, sf_dir, monkeypatch, build):
+    """Building the plan takes the corpus size from the parquet footers:
+    no `DataFrame.count()` job. (The build still runs other jobs: the
+    parquet schema read, and for `minhash_lsh_neardup` the shuffle
+    stages of its lazy `localCheckpoint` under AQE, so an empty job
+    group is not the test.)"""
+
+    def count(self):
+        raise AssertionError("count() while building the plan")
+
+    monkeypatch.setattr(type(spark.range(1)), "count", count)
+    build(spark, sf_dir)

@@ -103,3 +103,26 @@ def test_no_crash_hooks_in_package():
                     if any(b in line for b in banned):
                         offenders.append(f"{path}:{i}: {line.strip()}")
     assert not offenders, "\n".join(offenders)
+
+
+def test_environment_read_only_for_deployment():
+    """The package reads the environment only for deployment settings:
+    the session's CPU count and driver memory (`session.py`) and the
+    driver-window round pin (`plans/registry.py`). An operator setting
+    read from the environment is a hidden knob that no caller sees and
+    that an exact oracle cannot follow. Comments may name them."""
+    allowed = {"session.py", os.path.join("plans", "registry.py")}
+    offenders = []
+    for root, _dirs, files in os.walk(_PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            if os.path.relpath(path, _PKG) in allowed:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                for i, line in enumerate(fh, 1):
+                    code = line.split("#", 1)[0]
+                    if "os.environ" in code or "os.getenv" in code:
+                        offenders.append(f"{path}:{i}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
